@@ -35,15 +35,22 @@ def task_type_distribution(examples: DataFrame) -> DataFrame:
 
     Ratio uses an empty-frame window (sum over the whole result) — the
     result set is tiny (≤5 task types) so the single-partition window is
-    free; the heavy lifting happened in the groupBy.
+    free; the heavy lifting happened in the groupBy. The window already
+    put every row in one partition; the result keeps that explicit (one
+    partition, sorted locally by task_type), so a sink writes one ordered
+    file without a coalesce of its own.
     """
     counts = examples.groupBy("task_type").agg(F.count(F.lit(1)).alias("n"))
     total = F.sum("n").over(Window.partitionBy())
-    return counts.select(
-        "task_type",
-        "n",
-        F.round(F.col("n") * 100.0 / total, 6).alias("pct"),
-    ).orderBy("task_type")
+    return (
+        counts.select(
+            "task_type",
+            "n",
+            F.round(F.col("n") * 100.0 / total, 6).alias("pct"),
+        )
+        .coalesce(1)
+        .sortWithinPartitions("task_type")
+    )
 
 
 def combined_statistics(per_project_stats: DataFrame) -> DataFrame:

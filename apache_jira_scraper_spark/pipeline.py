@@ -11,8 +11,9 @@ than aborting the job.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from functools import cached_property
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,13 +23,44 @@ from .operators.tasks import issues_to_examples
 from .schemas import RAW_ISSUE
 
 
-@dataclass
 class PipelineResult:
-    issues: DataFrame
-    examples: DataFrame
-    summary: DataFrame
-    distribution: DataFrame
-    raw: DataFrame | None = None
+    """The pipeline's frames. Only `issues` (and `raw`) are built up front;
+    `examples`, `summary` and `distribution` are derived on first access,
+    so a caller that only writes zones never pays their driver-side plan
+    construction (hundreds of Column builds and py4j round trips). A
+    frame passed to the constructor overrides its derivation."""
+
+    def __init__(
+        self,
+        issues: DataFrame,
+        examples: DataFrame | None = None,
+        summary: DataFrame | None = None,
+        distribution: DataFrame | None = None,
+        raw: DataFrame | None = None,
+    ):
+        self.issues = issues
+        self.raw = raw
+        # cached_property is a non-data descriptor: an instance attribute
+        # of the same name shadows it, i.e. overrides the derivation
+        for name, df in (
+            ("examples", examples),
+            ("summary", summary),
+            ("distribution", distribution),
+        ):
+            if df is not None:
+                setattr(self, name, df)
+
+    @cached_property
+    def examples(self) -> DataFrame:
+        return issues_to_examples(self.issues)
+
+    @cached_property
+    def summary(self) -> DataFrame:
+        return summary_statistics(self.examples)
+
+    @cached_property
+    def distribution(self) -> DataFrame:
+        return task_type_distribution(self.examples)
 
 
 def read_raw_json(spark: SparkSession, path: str, project: str | None = None) -> DataFrame:
@@ -44,23 +76,13 @@ def read_raw_json(spark: SparkSession, path: str, project: str | None = None) ->
 
 
 def run_pipeline(raw: DataFrame, project: str | None = None) -> PipelineResult:
-    issues = extract_issues(raw, project=project)
-    examples = issues_to_examples(issues)
-    return PipelineResult(
-        issues=issues,
-        examples=examples,
-        summary=summary_statistics(examples),
-        distribution=task_type_distribution(examples),
-        raw=raw,
-    )
+    return PipelineResult(issues=extract_issues(raw, project=project), raw=raw)
 
 
 def write_zones(result: PipelineResult, base_dir: str) -> None:
     """Persist the zones (S5-S7) with the REAL lakehouse zone discipline:
-    each downstream zone derives from the PERSISTED upstream zone, not from
-    the original lineage — otherwise every action re-runs the whole
-    raw->extract->explode chain (4x the ingest cost at the scale this
-    module targets), and a crash mid-write leaves no bronze to replay.
+    gold and stats derive from the PERSISTED silver zone, not from the
+    original lineage, and a crash mid-write leaves bronze to replay.
 
     CONTRACT: only `result.raw` and `result.issues` are consumed. The
     `examples`/`summary`/`distribution` fields are deliberately IGNORED and
@@ -68,6 +90,18 @@ def write_zones(result: PipelineResult, base_dir: str) -> None:
     discipline above) — a caller who customized those DataFrames on the
     PipelineResult must write them itself; this function will not reflect
     the customization in gold/stats.
+
+    One source scan per call: `result.raw` is persisted for the bronze
+    and silver writes. The bronze write materializes it, and silver's
+    `result.issues` lineage (which contains raw's plan) reads the cached
+    scan through Spark's cache substitution. Bronze and silver therefore
+    hold ONE snapshot of a live source; without the cache, silver would
+    re-fetch every REST page and could see rows bronze never had.
+    Likewise the gold examples are built once, persisted by the gold
+    write, and both stats are computed from that cache. Each persisted
+    frame is unpersisted as soon as its writes are done, on success or
+    failure (a raw frame the caller had already cached is left as it
+    was), so none outlives the call.
 
       bronze: the raw envelope as parquet (replay/backfill source; the
               reference's pretty-printed JSON array at scraper.py:339-356
@@ -82,25 +116,36 @@ def write_zones(result: PipelineResult, base_dir: str) -> None:
               The reference's own downstream workload
               (example_usage.py:196-212) filters by task type, so the scan
               still prunes to one directory.
-      stats:  summary + distribution, derived from the silver re-read.
+      stats:  summary + distribution, from the persisted gold examples.
     """
-    if result.raw is not None:
-        result.raw.write.mode("overwrite").parquet(f"{base_dir}/bronze/raw")
-    result.issues.write.mode("overwrite").partitionBy("project").parquet(
-        f"{base_dir}/silver/issues"
-    )
+    raw = result.raw
+    own_raw = raw is not None and raw.storageLevel == StorageLevel.NONE
+    if own_raw:
+        raw.persist()
+    try:
+        if raw is not None:
+            raw.write.mode("overwrite").parquet(f"{base_dir}/bronze/raw")
+        result.issues.write.mode("overwrite").partitionBy("project").parquet(
+            f"{base_dir}/silver/issues"
+        )
+    finally:
+        if own_raw:
+            raw.unpersist()
     spark = result.issues.sparkSession
     silver = spark.read.parquet(f"{base_dir}/silver/issues")
-    examples = issues_to_examples(silver)
-    (
-        examples.withColumn("task", F.col("task_type"))
-        .write.mode("overwrite")
-        .partitionBy("task")
-        .json(f"{base_dir}/gold/examples")
-    )
-    summary_statistics(examples).coalesce(1).write.mode("overwrite").json(
-        f"{base_dir}/stats/summary"
-    )
-    task_type_distribution(examples).coalesce(1).write.mode("overwrite").json(
-        f"{base_dir}/stats/distribution"
-    )
+    examples = issues_to_examples(silver).persist()
+    try:
+        (
+            examples.withColumn("task", F.col("task_type"))
+            .write.mode("overwrite")
+            .partitionBy("task")
+            .json(f"{base_dir}/gold/examples")
+        )
+        summary_statistics(examples).coalesce(1).write.mode("overwrite").json(
+            f"{base_dir}/stats/summary"
+        )
+        task_type_distribution(examples).write.mode("overwrite").json(
+            f"{base_dir}/stats/distribution"
+        )
+    finally:
+        examples.unpersist()

@@ -258,6 +258,29 @@ def write_idempotent_parquet(stream: DataFrame, out_dir: str, checkpoint_dir: st
     )
 
 
+def _write_with_segment_checkpoints(write, segments: list[DataFrame]) -> list[DataFrame]:
+    """Run `write()` and an eager localCheckpoint of each segment on
+    concurrent driver threads (guide §2.6, overlap independent jobs: the
+    batch pays the slowest job, not the sum) and return the checkpoints.
+
+    If ANY of the jobs raises, every checkpoint that did materialize is
+    freed and the first error is re-raised, the write's first: the pool
+    exit has already waited for all of them, so no future is left
+    unobserved and no orphan segment outlives the failed batch."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=1 + len(segments)) as pool:
+        f_w = pool.submit(write)
+        f_cks = [pool.submit(s.localCheckpoint, True) for s in segments]
+    errors = [f.exception() for f in (f_w, *f_cks) if f.exception() is not None]
+    if errors:
+        for f in f_cks:
+            if f.exception() is None:
+                _free_local_checkpoint(f.result())
+        raise errors[0]
+    return [f.result() for f in f_cks]
+
+
 def streaming_dedup_ingest(
     doc_stream: DataFrame,
     out_dir: str,
@@ -365,26 +388,12 @@ def streaming_dedup_ingest(
         # concurrent driver threads so the batch pays the slowest, not the
         # sum. The REPLAY CONTRACT is untouched: checkpointing a segment
         # is not a state advance — tier.add() below still runs only after
-        # the write's .result() proves the batch directory committed; on a
-        # write failure the orphan segment checkpoints are freed.
-        sh_kept, sig_kept = parts
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_w = pool.submit(
-                kept.write.mode("overwrite").parquet,
-                f"{out_dir}/batch_id={batch_id}",
-            )
-            f_sh = pool.submit(sh_kept.localCheckpoint, True)
-            f_sig = pool.submit(sig_kept.localCheckpoint, True)
-            sh_ck = f_sh.result()
-            sig_ck = f_sig.result()
-            try:
-                f_w.result()
-            except BaseException:
-                _free_local_checkpoint(sh_ck)
-                _free_local_checkpoint(sig_ck)
-                raise
+        # the write proves the batch directory committed; if any of the
+        # three jobs fails, the segment checkpoints that landed are freed.
+        sh_ck, sig_ck = _write_with_segment_checkpoints(
+            lambda: kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}"),
+            parts,
+        )
         # O(batch) state advance: only this batch's kept index segment;
         # tier merges amortize the rest (r09)
         sh_tier.add(sh_ck, batch_id)
@@ -940,28 +949,12 @@ def streaming_media_dedup_ingest(
         # r14 (guide §2.6): the survivor write and the two O(batch) state
         # segments are independent jobs over the materialized `kept`/`ph`
         # checkpoints — overlap them on driver threads; tier adds still
-        # gate on the write's .result() (state advances only after the
-        # batch directory committed), orphans freed on write failure.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_w = pool.submit(
-                kept.write.mode("overwrite").parquet,
-                f"{out_dir}/batch_id={batch_id}",
-            )
-            f_ids = pool.submit(kept.select("doc_id").localCheckpoint, True)
-            f_seg = pool.submit(
-                ph.join(kept.select("doc_id"), "doc_id", "left_semi").localCheckpoint,
-                True,
-            )
-            ids_ck = f_ids.result()
-            seg_ck = f_seg.result()
-            try:
-                f_w.result()
-            except BaseException:
-                _free_local_checkpoint(ids_ck)
-                _free_local_checkpoint(seg_ck)
-                raise
+        # gate on the write (state advances only after the batch directory
+        # committed); landed segments are freed if any of the jobs fails.
+        ids_ck, seg_ck = _write_with_segment_checkpoints(
+            lambda: kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}"),
+            [kept.select("doc_id"), ph.join(kept.select("doc_id"), "doc_id", "left_semi")],
+        )
         # state advances are O(batch) on BOTH tables; tier merges amortize
         ids_tier.add(ids_ck, batch_id)
         seg_tier.add(seg_ck, batch_id)

@@ -162,26 +162,34 @@ def _is_session_cached_call(node: ast.Call) -> bool:
 _MUTATORS = {"setdefault", "update", "pop", "popitem", "clear", "__setitem__"}
 
 
-def _violations(tree: ast.Module, caches: set[str]) -> list[str]:
+# The one module allowed a drain_session_caches() exemption (see
+# _violations): a function of that name anywhere else is checked like any
+# other code.
+DRAIN_MODULES = {"operators/text.py"}
+
+
+def _violations(tree: ast.Module, caches: set[str], rel: str) -> list[str]:
     """Every use of a cache name other than its definition must be as the
     first argument of a session_cached(...) call. Direct subscript stores,
     deletes, and mutating method calls are violations; so is ANY other
     read (passing the dict somewhere else is how an undisciplined write
     path starts).
 
-    ONE structural exemption (ADVICE r13): a module may define a
-    `drain_session_caches()` function that frees + clears its OWN caches
-    — the centralized drain site that keeps the text gate's frame memo
-    clearing coupled to its leg caches. Everything lexically inside that
-    one function is exempt; a drain helper under any other name still
-    fails here."""
+    ONE structural exemption (ADVICE r13): operators/text.py (the only
+    module in DRAIN_MODULES) may define a `drain_session_caches()`
+    function that frees + clears its OWN caches — the centralized drain
+    site that keeps the text gate's frame memo clearing coupled to its leg
+    caches. Everything lexically inside that one function is exempt; a
+    drain helper under any other name, or of that name in any other
+    module (ADVICE r14), still fails here."""
     bad: list[str] = []
     allowed_use: set[int] = set()  # id() of Name nodes used legitimately
     drain_nodes: set[int] = set()  # id() of every node inside the drain fn
-    for node in ast.walk(tree):
-        if isinstance(node, ast.FunctionDef) and node.name == "drain_session_caches":
-            for sub in ast.walk(node):
-                drain_nodes.add(id(sub))
+    if rel in DRAIN_MODULES:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "drain_session_caches":
+                for sub in ast.walk(node):
+                    drain_nodes.add(id(sub))
     for node in ast.walk(tree):
         if isinstance(node, ast.Call) and _is_session_cached_call(node):
             if node.args and isinstance(node.args[0], ast.Name):
@@ -228,12 +236,29 @@ def test_every_module_level_dict_is_inventoried_and_disciplined():
         caches = dicts - exempt
         if caches:
             found[rel] = caches
-            problems += [f"{rel}: {v}" for v in _violations(tree, caches)]
+            problems += [f"{rel}: {v}" for v in _violations(tree, caches, rel)]
     assert found == EXPECTED_CACHES, (
         "module-level dict inventory drifted — new session caches must be "
         f"added to EXPECTED_CACHES (and use io.session_cached): {found}"
     )
     assert not problems, "undisciplined cache access:\n" + "\n".join(problems)
+
+
+def test_drain_exemption_is_scoped_to_text_module():
+    """ADVICE r14 #3: a drain_session_caches() that clears its caches
+    directly passes only in operators/text.py; the same function in any
+    other module is a violation."""
+    tree = ast.parse(
+        "_X_CACHE = {}\n"
+        "def drain_session_caches():\n"
+        "    for k in list(_X_CACHE):\n"
+        "        del _X_CACHE[k]\n"
+        "    _X_CACHE.clear()\n"
+    )
+    assert _violations(tree, {"_X_CACHE"}, "operators/text.py") == []
+    bad = _violations(tree, {"_X_CACHE"}, "operators/dedup.py")
+    assert any("subscript-mutated" in v for v in bad)
+    assert any("_X_CACHE.clear()" in v for v in bad)
 
 
 def test_no_result_grain_caches():

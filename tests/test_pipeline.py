@@ -6,8 +6,16 @@ from __future__ import annotations
 
 import json
 
+import pytest
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
+
 from apache_jira_scraper_spark.operators.stats import merge_corpus
 from apache_jira_scraper_spark.pipeline import read_raw_json, run_pipeline, write_zones
+from apache_jira_scraper_spark.plans.inspect import assert_max_shuffles, physical_plan
+from apache_jira_scraper_spark.schemas import RAW_ISSUE
+from apache_jira_scraper_spark.sources import jira_source
+from apache_jira_scraper_spark.sources.mock_jira import MockJira
 from tests.fixtures import RAW_ISSUE_FIXTURE
 
 
@@ -47,6 +55,20 @@ def test_pipeline_end_to_end(spark, tmp_path):
     dist = {r["task_type"]: r for r in res_b.distribution.collect()}
     assert dist["question_answering"]["n"] == 6
     assert abs(dist["question_answering"]["pct"] - 600.0 / 13) < 1e-6
+    # one partition in task_type order, no range-partition exchange (the
+    # groupBy's and the window's exchanges only), with the rows and pct
+    # values the earlier global orderBy gave; write_zones writes it
+    # without a coalesce of its own
+    assert_max_shuffles(res_b.distribution, 2)
+    assert "rangepartitioning" not in physical_plan(res_b.distribution).lower()
+    assert res_b.distribution.rdd.getNumPartitions() == 1
+    assert [tuple(r) for r in res_b.distribution.collect()] == [
+        ("classification", 2, 15.384615),
+        ("issue_resolution", 1, 7.692308),
+        ("question_answering", 6, 46.153846),
+        ("status_prediction", 2, 15.384615),
+        ("summarization", 2, 15.384615),
+    ]
 
     out = tmp_path / "zones"
     write_zones(res_b, str(out))
@@ -99,3 +121,67 @@ def test_write_zones_recomputes_gold_from_persisted_silver(spark, tmp_path):
     assert spark.read.json(str(out / "gold/examples")).count() == 6
     stats = spark.read.json(str(out / "stats/summary")).collect()[0]
     assert stats["total_examples"] == 6
+
+
+def test_write_zones_scans_the_source_once(spark, tmp_path):
+    """One REST scan feeds bronze AND silver: every (project, startAt)
+    page is fetched exactly once (besides the per-project total probes,
+    maxResults=1), so both zones hold one snapshot of the source."""
+    jira_source.register(spark)
+    with MockJira({"KAFKA": 37, "SPARK": 25}) as srv:
+        raw = (
+            spark.read.format("jira")
+            .option("base_url", srv.url)
+            .option("projects", "KAFKA,SPARK")
+            .option("page_size", 10)
+            .load()
+        )
+        parsed = raw.select(
+            "project", F.from_json("payload", RAW_ISSUE).alias("i")
+        ).select("project", "i.*")
+        out = tmp_path / "zones"
+        write_zones(run_pipeline(parsed), str(out))
+        pages = [
+            (q["jql"].split()[2], int(q["startAt"]))
+            for q in srv.requests
+            if int(q["maxResults"]) != 1
+        ]
+    # each stripe's cursor walk ends with one short tail request past the
+    # last row (startAt 37 / 25): it is a page of its own, fetched once too
+    assert len(set(pages)) == len(pages), sorted(pages)
+    assert set(pages) == {
+        ("KAFKA", 0), ("KAFKA", 10), ("KAFKA", 20), ("KAFKA", 30), ("KAFKA", 37),
+        ("SPARK", 0), ("SPARK", 10), ("SPARK", 20), ("SPARK", 25),
+    }
+    bronze = {r["key"] for r in spark.read.parquet(str(out / "bronze/raw")).collect()}
+    silver = {
+        r["issue_key"]
+        for r in spark.read.parquet(str(out / "silver/issues")).collect()
+    }
+    assert len(bronze) == 62 and bronze == silver
+
+
+def test_write_zones_frees_its_persisted_frames(spark, tmp_path):
+    """write_zones persists the raw scan and the gold examples for its own
+    writes only: the session's persistent RDD count returns to its
+    baseline after a successful call AND after one whose gold write
+    raises (gold is a plain file), and the caller's raw is left uncached."""
+    p = tmp_path / "raw.json"
+    p.write_text(json.dumps([RAW_ISSUE_FIXTURE]))
+    res = run_pipeline(read_raw_json(spark, str(p)), project="KAFKA")
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+
+    write_zones(res, str(tmp_path / "ok"))
+    assert jsc.getPersistentRDDs().size() == baseline
+    assert res.raw.storageLevel == StorageLevel.NONE
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "gold").write_text("not a directory")
+    with pytest.raises(Exception):
+        write_zones(res, str(bad))
+    # the failure came after bronze and silver: the raw cache had landed
+    assert spark.read.parquet(str(bad / "silver/issues")).count() == 1
+    assert jsc.getPersistentRDDs().size() == baseline
+    assert res.raw.storageLevel == StorageLevel.NONE

@@ -471,6 +471,53 @@ def test_free_local_checkpoint_failure_is_detectable(spark):
     assert io_mod.FREE_CHECKPOINT_FAILURES == n + 1
 
 
+def test_segment_checkpoint_failure_frees_the_landed_segment(monkeypatch):
+    """ADVICE r14 #2: the ingest sinks overlap the survivor write with two
+    segment checkpoints. Whichever job fails first, every segment
+    checkpoint that did land is freed, the write's outcome is observed,
+    and the first error (the write's, if it failed) reaches the query."""
+    freed: list = []
+    monkeypatch.setattr(pipelines, "_free_local_checkpoint", freed.append)
+
+    class _Segment:
+        def __init__(self, ck=None, exc=None):
+            self.ck, self.exc = ck, exc
+
+        def localCheckpoint(self, eager):  # noqa: N802
+            assert eager
+            if self.exc is not None:
+                raise self.exc
+            return self.ck
+
+    def _write_ok():
+        wrote.append(True)
+
+    def _write_fails():
+        raise OSError("write failed")
+
+    # the FIRST segment fails, the second lands: the second is freed
+    wrote: list = []
+    with pytest.raises(RuntimeError, match="segment failed"):
+        pipelines._write_with_segment_checkpoints(
+            _write_ok, [_Segment(exc=RuntimeError("segment failed")), _Segment("ck_b")]
+        )
+    assert freed == ["ck_b"] and wrote == [True]
+    # write and a segment both fail: the write's error wins, the landed
+    # segment is still freed
+    freed.clear()
+    with pytest.raises(OSError, match="write failed"):
+        pipelines._write_with_segment_checkpoints(
+            _write_fails, [_Segment("ck_a"), _Segment(exc=RuntimeError("segment failed"))]
+        )
+    assert freed == ["ck_a"]
+    # all three succeed: both checkpoints are returned, nothing freed
+    freed.clear()
+    got = pipelines._write_with_segment_checkpoints(
+        _write_ok, [_Segment("ck_a"), _Segment("ck_b")]
+    )
+    assert got == ["ck_a", "ck_b"] and freed == []
+
+
 def test_streaming_media_dedup_ingest_segment_compaction(spark, tmp_path):
     """Three micro-batches with compact_every=2: the segment compaction
     path runs mid-stream and cross-batch dedup still holds across the
