@@ -8,6 +8,7 @@ single-file inputs.
 
 from __future__ import annotations
 
+import contextvars
 import os
 import threading
 from contextlib import contextmanager
@@ -140,6 +141,88 @@ def free_local_checkpoint(df: DataFrame | None) -> None:
 FREE_CHECKPOINT_FAILURES = 0
 _FREE_FAILURES_LOCK = threading.Lock()
 
+# The innermost open ownership scope: the list its owned frames go to. A
+# ContextVar, not a global or a thread-local: py4j callback threads (the
+# streaming sinks' foreachBatch) start with an empty context, so concurrent
+# batches never see each other's scope, while a pool that submits through
+# contextvars.copy_context().run shares its submitter's.
+_SCOPE: contextvars.ContextVar[list | None] = contextvars.ContextVar(
+    "io_scope", default=None
+)
+
+
+@contextmanager
+def scope():
+    """Open an ownership scope — THE lifetime rule for per-call
+    intermediates: the checkpoints and persisted frames a computation
+    needs only until the result they built has materialized.
+
+    A producer registers each such frame with `own` (`checkpoint` eagerly
+    localCheckpoints and registers in one step). The frame then belongs
+    to the innermost open scope, which releases everything it owns when
+    it closes, on success and on error (`release`: unpersist, then
+    free_local_checkpoint). Scopes nest; a loop may still free a
+    superseded owned checkpoint early (a second free is a no-op). Who
+    opens them:
+
+    - `session_cached` runs every build() in one, so a builder's
+      intermediates are freed as soon as it returns; the builder's own
+      final plain localCheckpoint, unowned, is what the cache keeps.
+    - `registry.register` wraps each gate. A gate may return a LAZY plan
+      over frames it owns, so that set is kept on the wrapper (`owning`)
+      and released on the gate's next call or by the wrapper's
+      `release()`.
+    - the streaming ingest sinks run each micro-batch body in one; their
+      tier segments stay unowned, because they are state.
+
+    With no scope open a frame is unowned: a checkpoint waits for driver
+    GC + ContextCleaner, a persisted frame stays cached until someone
+    unpersists it. Never use an owned frame, or a lazy plan over one,
+    after its scope has released it."""
+    frames: list = []
+    try:
+        with owning(frames):
+            yield frames
+    finally:
+        release(frames)
+
+
+@contextmanager
+def owning(frames: list):
+    """Make `frames` the innermost scope for the body WITHOUT releasing it
+    on exit — for an owner that outlives one block (the registry's gate
+    wrapper); `scope` is the self-releasing form."""
+    token = _SCOPE.set(frames)
+    try:
+        yield frames
+    finally:
+        _SCOPE.reset(token)
+
+
+def own(df: DataFrame) -> DataFrame:
+    """Register a checkpointed or persisted frame with the innermost open
+    scope (see `scope`) and return it; unowned when none is open."""
+    frames = _SCOPE.get()
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize `df` as an eager localCheckpoint owned by the innermost
+    open scope (see `scope`)."""
+    return own(df.localCheckpoint(eager=True))
+
+
+def release(frames: list) -> None:
+    """Free every frame in `frames` and empty it (a second call is a
+    no-op). Consumers of the freed frames must have materialized."""
+    while frames:
+        df = frames.pop()
+        df.unpersist()
+        free_local_checkpoint(df)
+
+
 # Serializes the save-narrow-restore windows over the session-global
 # spark.sql.shuffle.partitions conf (multimodal._build_clusters and
 # extended.q_stream_stateful's streaming-leg window): if two such windows
@@ -246,7 +329,8 @@ def session_cached(cache: dict, spark: SparkSession, extra_key: tuple, build):
         with _SESSION_CACHE_LOCK:
             got = cache.get(key)
         if got is None:
-            got = build()
+            with scope():  # the builder's intermediates die with the build
+                got = build()
             with _SESSION_CACHE_LOCK:
                 cache[key] = got
     return got

@@ -92,7 +92,8 @@ def bpe_train(
     (merges, encoded_words) where merges is the ordered driver-side rule
     list [(left, right), ...] (O(n_merges) — model-sized by construction)
     and encoded_words is the final (word, freq, symbols) DataFrame (the
-    trained segmentation of the word vocabulary, checkpointed).
+    trained segmentation of the word vocabulary, an io.checkpoint owned
+    by the caller's io scope).
 
     Every iteration is: one vocabulary-sized pair-count shuffle + a
     bounded driver collect + a zero-shuffle merge fold. A round that no
@@ -115,17 +116,16 @@ def bpe_train(
     ``counts_out``: when given, receives each accepted pair's exact
     corpus count at selection time (int, aligned with `merges`) — the
     gate certifies these under the driver hash."""
-    from ..io import free_local_checkpoint
+    from ..io import checkpoint, free_local_checkpoint
 
     if batch < 1:
         raise ValueError(f"bpe_train: batch must be >= 1, got {batch}")
-    words = (
+    words = checkpoint(
         docs.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select("w", "freq", _chars_col(F.col("w")).alias("symbols"))
-        .localCheckpoint(eager=True)
     )
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
@@ -168,9 +168,7 @@ def bpe_train(
         sym: Column = F.col("symbols")
         for left, right in accepted:
             sym = _merge_fold(sym, left, right)
-        nxt = words.select("w", "freq", sym.alias("symbols")).localCheckpoint(
-            eager=True
-        )
+        nxt = checkpoint(words.select("w", "freq", sym.alias("symbols")))
         free_local_checkpoint(words)
         words = nxt
     return merges, words
@@ -299,7 +297,6 @@ def bpe_segment(
     encoded_words: DataFrame | None = None,
     oov: str = "fold",
     ordered: bool = True,
-    scratch_out: list | None = None,
 ) -> DataFrame:
     """Segment a corpus under a trained merge list: per doc, the
     whitespace words' BPE symbols concatenated in order. Returns
@@ -326,9 +323,8 @@ def bpe_segment(
       truncated with an EAGER localCheckpoint and the superseded
       checkpoint freed once its successor materializes (ADVICE r12 —
       previously lazy checkpoints pinned corpus-sized blocks for the
-      session lifetime). The FINAL checkpoint backs the returned frame
-      and is caller-owned: appended to ``scratch_out`` when given (free
-      after the result is materialized), else left for GC.
+      session lifetime). Every checkpoint is an io.checkpoint; the FINAL
+      one backs the returned frame and stays with the caller's io scope.
 
     ``ordered=False`` skips the presentation sort (the
     exact_substring_dedup contract)."""
@@ -344,7 +340,7 @@ def bpe_segment(
             lambda w: _chars_col(w),
         ).alias("_ws"),
     )
-    from ..io import free_local_checkpoint
+    from ..io import checkpoint, free_local_checkpoint
 
     prev_ckpt: DataFrame | None = None
     for i, (left, right) in enumerate(merges):
@@ -355,11 +351,9 @@ def bpe_segment(
             ).alias("_ws"),
         )
         if (i + 1) % checkpoint_every == 0:
-            out = out.localCheckpoint(eager=True)
+            out = checkpoint(out)
             free_local_checkpoint(prev_ckpt)
             prev_ckpt = out
-    if prev_ckpt is not None and scratch_out is not None:
-        scratch_out.append(prev_ckpt)
     out = out.select(
         id_col,
         F.size(F.flatten(F.col("_ws"))).alias("n_pieces"),
@@ -590,9 +584,9 @@ def bpe_tokenize_and_pack(
     (driver gate 'bpe_merge'), bpe_segment's word-keyed join inside
     bpe_encode ('bpe_seg'), and text.pack_token_ids ('tokpack') — so the
     composition is certified piecewise and this function only owns the
-    plumbing. Note the trained word table's checkpoint stays referenced
-    by the returned sequences' LAZY plan — materialize (or persist)
-    sequences before freeing anything."""
+    plumbing. Note the trained word table's checkpoint, owned by the
+    caller's io scope, stays referenced by the returned sequences' LAZY
+    plan — materialize (or persist) sequences before the scope closes."""
     from .text import PACK_CONTEXT, pack_token_ids
 
     merges, words = bpe_train(

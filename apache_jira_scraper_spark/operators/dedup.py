@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import free_local_checkpoint, load_table, load_table_parallel
+from ..io import checkpoint, free_local_checkpoint, load_table, load_table_parallel, own
 from .graph import (
     PAGERANK_FINAL_CTE,
     PAGERANK_W_FINAL_CTE,
@@ -269,22 +269,17 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..io import session_cached
 
-    def _build() -> DataFrame:
-        jac, scratch = _minhash_pairs_uncached(spark, sf_dir)
-        cached = jac.localCheckpoint(eager=True)
-        # The checkpoint holds the final pair blocks; the build-time caches
-        # (shingle index, candidate set) would otherwise sit in executor
-        # memory for the rest of the session pressuring every later query.
-        for df in scratch:
-            df.unpersist()
-        return cached
-
-    return session_cached(_PAIRS_CACHE, spark, (sf_dir,), _build)
+    # The checkpoint holds the final pair blocks; the build's persisted
+    # candidate set and candidate shingles are freed with the build scope.
+    return session_cached(
+        _PAIRS_CACHE,
+        spark,
+        (sf_dir,),
+        lambda: _minhash_pairs_uncached(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
-def _minhash_pairs_uncached(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
+def _minhash_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE shingle+md5 pass (shared session cache): signatures (via the
     # top-32-bits trick in _signatures), sizes, and the verification
     # inverted index all read the same materialized (doc_id, sh) table
@@ -296,7 +291,7 @@ def _minhash_pairs_uncached(
     # every union branch, so a 4-way union of band joins costs 8 signature
     # rebuilds.
     bandrows = _band_rows(sig)
-    cand = (
+    cand = own(
         bandrows.select(F.col("doc_id").alias("d1"), "bidx", "bk")
         .join(bandrows.select(F.col("doc_id").alias("d2"), "bidx", "bk"), ["bidx", "bk"])
         .filter(F.col("d1") < F.col("d2"))
@@ -306,12 +301,9 @@ def _minhash_pairs_uncached(
     )
 
     # Exact-jaccard verification via the ONE shared implementation
-    # (_verify_jaccard; ordered pairs, shingle semi-join persisted into
-    # the returned scratch list) — the batch and incremental paths must
-    # run literally the same verification code or they drift.
-    scratch: list[DataFrame] = [cand]
-    jac = _verify_jaccard(sh, cand, ordered=True, scratch=scratch)
-    return jac, scratch
+    # (_verify_jaccard, ordered pairs) — the batch and incremental paths
+    # must run literally the same verification code or they drift.
+    return _verify_jaccard(sh, cand, ordered=True)
 
 
 def build_dedup_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -357,10 +349,7 @@ def _band_rows(sig: DataFrame) -> DataFrame:
 
 
 def _verify_jaccard(
-    sh_all: DataFrame,
-    cand: DataFrame,
-    ordered: bool = False,
-    scratch: list[DataFrame] | None = None,
+    sh_all: DataFrame, cand: DataFrame, ordered: bool = False
 ) -> DataFrame:
     """Exact-jaccard verification of (d1, d2) candidates against a hashed
     shingle table, restricted to candidate docs via semi-joins — THE
@@ -372,19 +361,16 @@ def _verify_jaccard(
 
     ordered=True restricts to d1 < d2 candidate pairs (the self-join
     canonical form); False verifies both orientations (the incremental
-    new-vs-index form). Pass a `scratch` list to persist the candidate
-    shingle projection for multi-action callers — the persisted DF is
-    appended for the CALLER to unpersist once its consumers have run.
+    new-vs-index form). The candidate shingle projection feeds three
+    consumers (sizes and both sides of the intersection join), so it is
+    persisted and owned by the caller's io scope.
     """
     cand_docs = (
         cand.select(F.col("d1").alias("doc_id"))
         .unionByName(cand.select(F.col("d2").alias("doc_id")))
         .distinct()
     )
-    sh_cand = sh_all.join(cand_docs, "doc_id", "left_semi")
-    if scratch is not None:
-        sh_cand = sh_cand.persist()
-        scratch.append(sh_cand)
+    sh_cand = own(sh_all.join(cand_docs, "doc_id", "left_semi").persist())
     pair_pred = (
         (F.col("d1") < F.col("d2")) if ordered else (F.col("d1") != F.col("d2"))
     )
@@ -414,7 +400,6 @@ def _verify_jaccard(
 def incremental_dedup(
     new_docs: DataFrame,
     index: tuple[DataFrame, DataFrame] | None = None,
-    scratch_out: list | None = None,
     kept_parts_out: list | None = None,
 ) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
     """Dedupe a NEW crawl batch against the already-kept corpus without
@@ -445,15 +430,11 @@ def incremental_dedup(
     would be (i, i), which verification rightly ignores). Content dupes
     arriving under NEW ids go through LSH as usual.
 
-    Returns (kept_new_docs, updated_index). `scratch_out`, when given,
-    receives this call's INTERNAL checkpoints (the batch shingle/signature
-    tables and the losers set) so a caller that re-materializes the
-    returned frames (the streaming sink) can deterministically free them
-    afterwards (io.free_local_checkpoint) instead of pinning three
-    superseded checkpoints per batch until driver GC (review r08); only
-    free them once every returned frame has been eagerly re-checkpointed.
-    `kept_parts_out`, when given, receives the LAZY (sh_kept, sig_kept)
-    pair covering ONLY this batch's kept docs — the per-batch index
+    Returns (kept_new_docs, updated_index), lazy plans over this call's
+    internal checkpoints (the batch shingle/signature tables and the
+    losers set), which the caller's io scope owns. `kept_parts_out`,
+    when given, receives the LAZY (sh_kept, sig_kept) pair covering
+    ONLY this batch's kept docs — the per-batch index
     SEGMENT a tiered-state caller (streaming_dedup_ingest, r09)
     checkpoints instead of re-materializing the full unioned index every
     advance.
@@ -472,8 +453,8 @@ def incremental_dedup(
     # md5 + minhash subtree (measured: the vs-index round spent most of its
     # wall re-deriving sh_new/sig_new at sf0.1). eager=False keeps plan
     # construction side-effect-free; blocks land on first use.
-    sh_new = sh_new.localCheckpoint(eager=False)
-    sig_new = sig_new.localCheckpoint(eager=False)
+    sh_new = own(sh_new.localCheckpoint(eager=False))
+    sig_new = own(sig_new.localCheckpoint(eager=False))
     bands_new = _band_rows(sig_new)
     if sig_idx is not None:
         vs_index = (
@@ -502,11 +483,8 @@ def incremental_dedup(
     cand = within if vs_index is None else within.unionByName(vs_index)
     # materialized once: three consumers (kept docs, shingle keep, signature
     # keep) would otherwise each re-run the band-join + verification subtree
-    losers = (
-        _verify_jaccard(sh_all, cand)
-        .select(F.col("d2").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    losers = checkpoint(
+        _verify_jaccard(sh_all, cand).select(F.col("d2").alias("doc_id")).distinct()
     )
     # no broadcast hint on `losers`: it is batch-cardinality (unbounded at
     # scale) — plain anti-joins let AQE broadcast when it is actually small
@@ -518,8 +496,6 @@ def incremental_dedup(
         if sig_idx is None
         else (sh_idx.unionByName(sh_kept), sig_idx.unionByName(sig_kept))
     )
-    if scratch_out is not None:
-        scratch_out.extend([sh_new, sig_new, losers])
     if kept_parts_out is not None:
         kept_parts_out.extend([sh_kept, sig_kept])
     return kept, new_index
@@ -1220,7 +1196,6 @@ ORDER BY v1, v2
 def connected_components(
     edges: DataFrame,
     max_iter: int = 32,
-    scratch_out: list | None = None,
     own_edges: bool = True,
 ) -> DataFrame:
     """Connected components over an undirected pair graph by iterative
@@ -1244,12 +1219,8 @@ def connected_components(
     truncated each round with localCheckpoint (cluster analog: reliable
     checkpoint / intermediate table), or the plan tree doubles per round.
 
-    `scratch_out`, when given, receives the CONVERGED labels checkpoint
-    that backs the returned frame — a caller that eagerly re-materializes
-    the result (the multimodal gate's session-cached clusters leg, r09)
-    can then free it deterministically instead of leaving one dead
-    labels-sized RDD per call to driver GC; callers that consume the
-    returned frame lazily must NOT free it.
+    The returned frame is a lazy projection over the CONVERGED labels
+    checkpoint, which the caller's io scope owns.
 
     `own_edges=False` means the caller already holds an eager checkpoint
     of `edges` and keeps ownership (no re-checkpoint here, no free on
@@ -1262,8 +1233,8 @@ def connected_components(
     if own_edges:
         edges = edges.localCheckpoint(eager=True)
     sym = symmetric_edges(edges)
-    labels_ck = (
-        sym.select("node").distinct().withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
+    labels_ck = checkpoint(
+        sym.select("node").distinct().withColumn("lbl", F.col("node"))
     )
     labels = labels_ck
     lbl_type = dict(labels.dtypes)["lbl"]
@@ -1279,14 +1250,13 @@ def connected_components(
         # The convergence check becomes a narrow filter-count over the
         # round's checkpoint — one shuffle join per round removed, same
         # labels, same `changed` count.
-        new_ck = (
+        new_ck = checkpoint(
             nbr_lbl.withColumn("own", F.lit(None).cast(lbl_type))
             .unionByName(
                 labels.select("node", "lbl", F.col("lbl").alias("own"))
             )
             .groupBy("node")
             .agg(F.min("lbl").alias("lbl"), F.max("own").alias("old"))
-            .localCheckpoint(eager=True)
         )
         changed = new_ck.filter(F.col("lbl") != F.col("old")).count()
         # the superseded round's label checkpoint is never read again —
@@ -1315,8 +1285,6 @@ def connected_components(
         )
     if own_edges:
         free_local_checkpoint(edges)  # converged: the edge checkpoint is done
-    if scratch_out is not None:
-        scratch_out.append(labels_ck)
     return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
@@ -1333,22 +1301,17 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Session-cached (the silver-table discipline): a pure function of
     (session, sf_dir), and un-cached every assemble_corpus call would
-    re-run the multi-round hash-to-min loop AND pin a fresh converged-
-    labels checkpoint per call (connected_components returns it lazily,
-    so the caller can never free it — review r10)."""
+    re-run the multi-round hash-to-min loop per call (review r10)."""
     from ..io import session_cached
 
-    def _build() -> DataFrame:
-        edges = minhash_pairs(spark, sf_dir).select("d1", "d2")
-        scratch: list = []
-        labels = connected_components(edges, scratch_out=scratch).localCheckpoint(
-            eager=True
-        )
-        for df in scratch:  # the converged-labels scratch is superseded
-            free_local_checkpoint(df)  # by the cached projection above
-        return labels
-
-    return session_cached(_LABELS_CACHE, spark, (sf_dir,), _build)
+    return session_cached(
+        _LABELS_CACHE,
+        spark,
+        (sf_dir,),
+        lambda: connected_components(
+            minhash_pairs(spark, sf_dir).select("d1", "d2")
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _cluster_core(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1362,9 +1325,10 @@ def _cluster_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     The three consumers still run on concurrent driver threads over ONE
     eager edge checkpoint (own_edges=False) — the gate pays the slowest
     loop, not the sum (measured 3.56 -> ~2.3 s at sf0.1, r11). The
-    consumers' final converged checkpoints back the returned frame, so
-    they cannot be freed here (lazy result); each loop's superseded
-    per-round checkpoints are freed inside the loops themselves.
+    consumers' final converged checkpoints back the returned frame (lazy
+    result): each thread runs in a copy of the caller's context, so they
+    land in the caller's io scope; each loop's superseded per-round
+    checkpoints are freed inside the loops themselves.
     """
     # jaccard ppm rides the edge checkpoint as the weight column:
     # round(jaccard*1e6) is exact in both engines because the 6-decimal
@@ -1381,13 +1345,19 @@ def _cluster_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         from concurrent.futures import ThreadPoolExecutor
+        from contextvars import copy_context
 
         with ThreadPoolExecutor(max_workers=3) as ex:
             f_lbl = ex.submit(
-                connected_components, edges.select("d1", "d2"), own_edges=False
+                copy_context().run,
+                connected_components,
+                edges.select("d1", "d2"),
+                own_edges=False,
             )
-            f_rk = ex.submit(pagerank, edges.select("d1", "d2"), own_edges=False)
-            f_rw = ex.submit(pagerank_weighted, edges, own_edges=False)
+            f_rk = ex.submit(
+                copy_context().run, pagerank, edges.select("d1", "d2"), own_edges=False
+            )
+            f_rw = ex.submit(copy_context().run, pagerank_weighted, edges, own_edges=False)
             labels = f_lbl.result()
             ranks = f_rk.result()
             ranks_w = f_rw.result().withColumnRenamed(
@@ -1512,22 +1482,15 @@ def _sem_lsh_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ran connected components over the cached pair table on EVERY gate
     call (bench samples 3x) — ~1.5-3 s of iterative join/agg rounds per
     call for a result that is a pure function of (session, sf_dir). Same
-    discipline as the ivf leg below; the converged-labels scratch frees
-    after the checkpoint."""
+    discipline as the ivf leg below."""
     from ..io import session_cached
     from .ivf import semantic_dedup
 
     def _build() -> DataFrame:
         proj = _emb_projection(spark, sf_dir, EMB_N_BITS)
-        scratch: list = []
-        out = semantic_dedup(
-            proj.select("vec_id"),
-            pairs=_emb_pairs_cached(spark, sf_dir),
-            scratch_out=scratch,
+        return semantic_dedup(
+            proj.select("vec_id"), pairs=_emb_pairs_cached(spark, sf_dir)
         ).localCheckpoint(eager=True)
-        for df in scratch:
-            free_local_checkpoint(df)
-        return out
 
     return session_cached(_SEM_LSH_CACHE, spark, (sf_dir,), _build)
 
@@ -1536,8 +1499,7 @@ def _sem_ivf_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached IVF leg of the semantic-dedup gate: exact-discipline
     training (ivf_build_exact — one bounded collect + driver numpy) +
     nprobe-2 blocked pair generation + components, checkpointed once per
-    (session, sf_dir); the converged-labels scratch frees after the
-    checkpoint (the _LABELS_CACHE pattern)."""
+    (session, sf_dir) (the _LABELS_CACHE pattern)."""
     from ..io import session_cached
     from .ivf import ivf_build_exact, ivf_near_dup_pairs_exact, semantic_dedup
     from .similarity import _emb
@@ -1545,15 +1507,9 @@ def _sem_ivf_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build() -> DataFrame:
         emb = _emb(spark, sf_dir)
         cents = ivf_build_exact(emb)
-        scratch: list = []
-        out = semantic_dedup(
-            emb.select("vec_id"),
-            pairs=ivf_near_dup_pairs_exact(emb, cents, scratch_out=scratch),
-            scratch_out=scratch,
+        return semantic_dedup(
+            emb.select("vec_id"), pairs=ivf_near_dup_pairs_exact(emb, cents)
         ).localCheckpoint(eager=True)
-        for df in scratch:
-            free_local_checkpoint(df)
-        return out
 
     return session_cached(_SEM_IVF_CACHE, spark, (sf_dir,), _build)
 
@@ -1567,17 +1523,11 @@ def _sem_proto_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _emb
 
     def _build() -> DataFrame:
-        from ..io import free_local_checkpoint
-
         emb = _emb(spark, sf_dir)
         cents = ivf_build_exact(emb)
-        scratch: list = []
-        out = density_prune(
-            emb.select("vec_id", "e"), cents, ordered=False, scratch_out=scratch
+        return density_prune(
+            emb.select("vec_id", "e"), cents, ordered=False
         ).localCheckpoint(eager=True)
-        for df in scratch:
-            free_local_checkpoint(df)
-        return out
 
     return session_cached(_SEM_PROTO_CACHE, spark, (sf_dir,), _build)
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import checkpoint, load_table
 
 
 def _w():
@@ -705,15 +705,14 @@ def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The interval table is bounded (<= INTERVAL_GATE_MAX_USER rows) —
     # checkpoint it so the width probe below and the join's two sides all
     # read the 200 stored rows instead of re-running the events scan+agg
-    # (three consumers, one scan).
-    iv = (
+    # (three consumers, one scan). The gate's io scope owns it.
+    iv = checkpoint(
         ev.groupBy("user_id")
         .agg(
             F.unix_timestamp(F.min("ts")).alias("start"),
             F.unix_timestamp(F.max("ts")).alias("end"),
         )
         .select(F.col("user_id").alias("id"), "start", "end")
-        .localCheckpoint(eager=True)
     )
     # r13 optimization (guide §2.5: size the partitioning key to the data,
     # not a constant): these per-user activity spans cover nearly the whole

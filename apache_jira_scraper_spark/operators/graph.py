@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import free_local_checkpoint
+from ..io import checkpoint, free_local_checkpoint
 
 PAGERANK_ITERS = 5
 MASS_PPB = 1_000_000_000
@@ -65,7 +65,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = PAGERANK_ITERS,
     own_edges: bool = True,
-    scratch_out: list | None = None,
     checkpoint_every: int = 8,
 ) -> DataFrame:
     """Fixed-point PageRank over an undirected (d1, d2) pair graph.
@@ -74,9 +73,9 @@ def pagerank(
     ``own_edges=False`` means the caller already holds an eager
     checkpoint of ``edges`` and keeps ownership (the ``dedup_clusters``
     gate shares one edge checkpoint between components and pagerank).
-    ``scratch_out``, when given, receives the final ranks checkpoint
-    backing the returned frame so an eager consumer can free it
-    deterministically (the ``connected_components`` contract).
+    The returned frame is a lazy projection over the final ranks
+    checkpoint, which the caller's io scope owns (the
+    ``connected_components`` contract).
 
     ``checkpoint_every`` bounds lineage depth: unlike the convergence
     loop in ``connected_components`` (which needs a per-round action for
@@ -129,14 +128,12 @@ def pagerank(
             ranks = ranks.localCheckpoint(eager=True)
             mid_ckpts.append(ranks)
     # The final materialization is the loop's ONLY action for short runs.
-    ranks = ranks.localCheckpoint(eager=True)
+    ranks = checkpoint(ranks)
     for c in mid_ckpts:  # superseded truncation points, never read again
         free_local_checkpoint(c)
     free_local_checkpoint(deg)
     if own_edges:
         free_local_checkpoint(edges)
-    if scratch_out is not None:
-        scratch_out.append(ranks)
     return ranks.select(
         F.col("node").alias("doc_id"), F.col("r").cast("long").alias("pagerank_ppb")
     )
@@ -147,7 +144,6 @@ def pagerank_weighted(
     weight_col: str = "w_ppm",
     iters: int = PAGERANK_ITERS,
     own_edges: bool = True,
-    scratch_out: list | None = None,
     checkpoint_every: int = 8,
 ) -> DataFrame:
     """Similarity-weighted PageRank over an undirected (d1, d2, weight)
@@ -249,14 +245,12 @@ def pagerank_weighted(
         if k % checkpoint_every == 0 and k < iters:
             ranks = ranks.localCheckpoint(eager=True)
             mid_ckpts.append(ranks)
-    ranks = ranks.localCheckpoint(eager=True)
+    ranks = checkpoint(ranks)
     for c in mid_ckpts:
         free_local_checkpoint(c)
     free_local_checkpoint(wsum)
     if own_edges:
         free_local_checkpoint(edges)
-    if scratch_out is not None:
-        scratch_out.append(ranks)
     return ranks.select(
         F.col("node").alias("doc_id"), F.col("r").cast("long").alias("pagerank_ppb")
     )

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..io import checkpoint
+
 # Above this k the argmin literal expression (k zip_with/aggregate folds in
 # one projection) stops being codegen-friendly; assignment switches to the
 # broadcast-join form.
@@ -245,7 +247,6 @@ def semantic_dedup(
     threshold: float = 0.25,
     nprobe: int = 2,
     pairs: DataFrame | None = None,
-    scratch_out: list | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: drop all but one vector from
     every group of embedding-space near-duplicates — the embedding twin of
@@ -274,13 +275,8 @@ def semantic_dedup(
         if centroids is None:
             raise ValueError("semantic_dedup needs either centroids or pairs")
         pairs = ivf_near_dup_pairs(emb, centroids, threshold=threshold, nprobe=nprobe)
-    # scratch_out forwards connected_components' converged-labels
-    # checkpoint to callers that eagerly re-materialize the result (the
-    # session-cached ivf gate leg) so they can free it deterministically;
-    # lazy consumers must NOT free it (the components contract).
     comp = connected_components(
-        pairs.select(F.col("v1").alias("d1"), F.col("v2").alias("d2")),
-        scratch_out=scratch_out,
+        pairs.select(F.col("v1").alias("d1"), F.col("v2").alias("d2"))
     )
     return (
         emb.select("vec_id")
@@ -590,7 +586,6 @@ def density_prune(
     vec_col: str = "e",
     id_col: str = "vec_id",
     ordered: bool = True,
-    scratch_out: list | None = None,
 ) -> DataFrame:
     """D4 density/prototype pruning: within each quantizer cell, drop the
     ``prune_ppm``-fraction of vectors NEAREST their centroid (most
@@ -616,20 +611,14 @@ def density_prune(
 
     The bucketed assignment feeds BOTH the histogram and the final
     labels; lazy, Spark re-derives it per consumer (two corpus passes —
-    the executed-plan reading in EXPLAIN.md r13). Pass ``scratch_out``
-    to materialize the 3-column frame once via localCheckpoint instead;
-    the checkpoint is appended for the CALLER to free after it
-    materializes the result (the bpe_segment ownership convention —
-    never silently pinned).
+    the executed-plan reading in EXPLAIN.md r13), so the 3-column frame
+    is materialized once (io.checkpoint, owned by the caller's io scope).
     """
     asg = ivf_assign_exact(
         emb, centroids, vec_col=vec_col, nprobe=1, id_col=id_col, dist_col="_d"
     )
     b = F.expr(f"CAST(ROUND(_d * 1000000, 0) AS BIGINT) div {int(grid)}")
-    asgb = asg.select(id_col, "cid", b.alias("b"))
-    if scratch_out is not None:
-        asgb = asgb.localCheckpoint(eager=True)
-        scratch_out.append(asgb)
+    asgb = checkpoint(asg.select(id_col, "cid", b.alias("b")))
     hist = asgb.groupBy("cid", "b").agg(F.count(F.lit(1)).alias("cnt"))
     wcum = Window.partitionBy("cid").orderBy("b")
     cut = (
@@ -664,26 +653,18 @@ def ivf_near_dup_pairs_exact(
     centroids: DataFrame,
     threshold: float = 0.25,
     nprobe: int = 2,
-    scratch_out: list | None = None,
 ) -> DataFrame:
     """ivf_near_dup_pairs over the exact assignment — the hash-checkable
     IVF-blocked pair generator (pair verification was already exact; the
     blocking now is too).
 
-    r12 cold-cost work (VERDICT r11 item 2): when ``scratch_out`` is
-    given, the assignment subtree is localCheckpointed so the self-join
-    evaluates it once instead of twice, and the caller owns freeing the
-    checkpoint (the bigram_logprob scratch convention — an unconditional
-    eager checkpoint would leak one assignment-sized RDD per call for
-    default-signature callers and run jobs at plan-construction time,
-    review r12). The cell-keyed self-join is SALTED (_PAIR_SALT): 16
-    cells means 16-way parallelism at best for the quadratic per-cell
-    cosine work; salting fans it out to 16*_PAIR_SALT tasks (measured
+    r12 cold-cost work (VERDICT r11 item 2): the assignment subtree is
+    checkpointed (io.checkpoint, owned by the caller's io scope) so the
+    self-join evaluates it once instead of twice. The cell-keyed
+    self-join is SALTED (_PAIR_SALT): 16 cells means 16-way parallelism
+    at best for the quadratic per-cell cosine work; salting fans it out to 16*_PAIR_SALT tasks (measured
     4.4 s -> 1.4 s warm at sf0.1 on 32 cores)."""
-    assigned = ivf_assign_exact(emb, centroids, nprobe=nprobe)
-    if scratch_out is not None:
-        assigned = assigned.localCheckpoint(eager=True)
-        scratch_out.append(assigned)
+    assigned = checkpoint(ivf_assign_exact(emb, centroids, nprobe=nprobe))
     a = assigned.select(
         F.col("vec_id").alias("v1"), F.col("e").alias("e1"), F.col("nrm").alias("n1"),
         "cid",

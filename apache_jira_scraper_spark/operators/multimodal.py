@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import (
+    checkpoint,
     free_local_checkpoint,
     load_table,
     narrowed_shuffle_partitions,
@@ -3092,9 +3093,7 @@ def media_near_dup_against_index(
     ).select("new_doc", "new_idx", "index_doc", "index_idx", "hamming")
 
 
-def media_near_dup_clusters(
-    pairs: DataFrame, scratch_out: list | None = None
-) -> DataFrame:
+def media_near_dup_clusters(pairs: DataFrame) -> DataFrame:
     """Media dedup end-to-end tail (r08): connect a near-dup PAIR graph
     (the output of image/video/audio_near_dup_pairs — any DataFrame with
     doc_a/doc_b columns) into components with the same hash-to-min
@@ -3107,16 +3106,15 @@ def media_near_dup_clusters(
 
     Scale shape inherits from connected_components: one shuffle join +
     one min-agg per round, rounds = component diameter (near-dup piles
-    are near-cliques, diameter 2-3), lineage truncated per round.
-    `scratch_out` forwards to connected_components (receives the
-    converged labels checkpoint backing the result — free it only after
-    eagerly re-materializing)."""
+    are near-cliques, diameter 2-3), lineage truncated per round; the
+    converged labels checkpoint backing the result is owned by the
+    caller's io scope."""
     from .dedup import connected_components
 
     edges = pairs.select(
         F.col("doc_a").alias("d1"), F.col("doc_b").alias("d2")
     )
-    comp = connected_components(edges, scratch_out=scratch_out)
+    comp = connected_components(edges)
     return comp.select(
         "doc_id",
         "cluster_id",
@@ -3893,32 +3891,24 @@ def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 8-way); only the component rounds — tiny fixed-cost exchanges
         # over the n_docs/PHASH_SAMPLE_MOD edge set — run at 8 (the r03
         # sizing argument; at production volume size it UP the same way).
-        edges_ck = edges.localCheckpoint(eager=True)
-        scratch: list = []
+        # The edge and label checkpoints are owned by the build scope:
+        # freed on success and on failure (e.g. non-convergence), so a
+        # retrying caller never rebuilds on a heap pinning the dead state.
+        edges_ck = checkpoint(edges)
         # One shared save-narrow-restore window
         # (io.narrowed_shuffle_partitions — serialized against
         # extended.q_stream_stateful's window, ADVICE r09; lock-leak- and
         # restore-failure-safe, review r10).
-        try:
-            with narrowed_shuffle_partitions(spark, 8):
-                clus = (
-                    media_near_dup_clusters(edges_ck, scratch_out=scratch)
-                    .select(
-                        "doc_id",
-                        F.col("cluster_id").alias("media_cluster"),
-                        F.col("is_keeper").cast("long").alias("media_keeper"),
-                    )
-                    .localCheckpoint(eager=True)
+        with narrowed_shuffle_partitions(spark, 8):
+            return (
+                media_near_dup_clusters(edges_ck)
+                .select(
+                    "doc_id",
+                    F.col("cluster_id").alias("media_cluster"),
+                    F.col("is_keeper").cast("long").alias("media_keeper"),
                 )
-        finally:
-            # superseded by the eager clus frame on success; on failure
-            # (e.g. non-convergence) a retrying caller must not rebuild
-            # on a heap pinning the dead state (review r09 follow-up —
-            # the same rule connected_components applies internally)
-            free_local_checkpoint(edges_ck)
-            for df in scratch:
-                free_local_checkpoint(df)
-        return clus
+                .localCheckpoint(eager=True)
+            )
 
     clus = session_cached(_MEDIA_CLUSTERS, spark, (sf_dir,), _build_clusters)
     m_parity = F.expr(

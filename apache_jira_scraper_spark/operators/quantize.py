@@ -764,7 +764,6 @@ def ivf_pq_residual_topk(
     nprobe: int = 2,
     vec_col: str = "e",
     id_col: str = "vec_id",
-    scratch_out: list | None = None,
 ) -> DataFrame:
     """IVFPQ with residual coding (FAISS by_residual=True — the canonical
     production configuration): the corpus stores PQ codes of x - c(x)
@@ -784,15 +783,15 @@ def ivf_pq_residual_topk(
     encoder), so it is materialized once — un-checkpointed, the
     full-corpus assignment + residual map would execute once per
     reference (the q_two_stage_topk double-execution class, review r10).
-    `scratch_out`, when given, receives that checkpoint so an eager
-    consumer can free it (the connected_components contract); lazy
-    consumers leave it to driver GC.
+    The checkpoint is owned by the caller's io scope (the
+    connected_components contract).
 
     Returns (qid, rank, nid, adist).
     """
+    from ..io import checkpoint
     from .ivf import ivf_assign
 
-    resid = (
+    resid = checkpoint(
         ivf_assign(emb, centroids, vec_col=vec_col, nprobe=1, id_col=id_col)
         .join(F.broadcast(centroids), "cid")
         .select(
@@ -800,10 +799,7 @@ def ivf_pq_residual_topk(
             "cid",
             F.zip_with(vec_col, "centroid", lambda x, y: x - y).alias("res"),
         )
-        .localCheckpoint(eager=True)
     )
-    if scratch_out is not None:
-        scratch_out.append(resid)
     corpus = resid.select(F.col(id_col).alias("nid"), "cid").join(
         pq_encode(resid, codebooks, vec_col="res", id_col=id_col).withColumnRenamed(
             id_col, "nid"

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import clean_text
-from ..io import load_table, load_table_parallel
+from ..io import checkpoint, load_table, load_table_parallel, own
 
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "for")
 
@@ -1045,7 +1045,7 @@ FROM scored GROUP BY doc_id ORDER BY doc_id
 """
 
 
-def bigram_logprob(docs: DataFrame, scratch_out: list | None = None) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Corpus-trained BIGRAM log-probability per document — the KenLM-style
     perplexity filter one order up from unigram_logprob (fluency: a doc
     whose word PAIRS are improbable under the corpus's own bigram model is
@@ -1071,13 +1071,12 @@ def bigram_logprob(docs: DataFrame, scratch_out: list | None = None) -> DataFram
 
     Returns (doc_id, n_bigrams, sum_logprob_en4, avg_logprob_en4).
 
-    ``scratch_out`` (ADVICE r10): the exploded ``pairs`` subtree is
-    multiply-referenced (model build + scoring join) and its row count is
-    corpus x tokens-per-doc. ReusedExchange already dedups the (w1, w2)
-    shuffle (measured 0.30 vs 0.24 s at sf0.1 — PERF.md r11), but
-    multi-action callers should still persist it once: pass a list and
-    the persisted frame is appended for the CALLER to unpersist after its
-    consumers have run — the ``_verify_jaccard`` contract.
+    ADVICE r10: the exploded ``pairs`` subtree is multiply-referenced
+    (model build + scoring join) and its row count is corpus x
+    tokens-per-doc. ReusedExchange already dedups the (w1, w2) shuffle
+    (measured 0.30 vs 0.24 s at sf0.1 — PERF.md r11), but it is still
+    persisted once, owned by the caller's io scope (the
+    ``_verify_jaccard`` contract).
     """
     toks = docs.select("doc_id", _toks_of(docs).alias("ts"))
     pairs = toks.select(
@@ -1090,9 +1089,7 @@ def bigram_logprob(docs: DataFrame, scratch_out: list | None = None) -> DataFram
             )
         ).alias("p"),
     ).select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    if scratch_out is not None:
-        pairs = pairs.persist()
-        scratch_out.append(pairs)
+    pairs = own(pairs.persist())
     cbg = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     ctx = cbg.groupBy("w1").agg(F.sum("c").alias("cw"))
     vocab = (
@@ -1966,8 +1963,6 @@ def bm25_topk(
     top_k: int = 5,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    materialize_tf: bool = False,
-    scratch_out: list | None = None,
 ) -> DataFrame:
     """BM25 text retrieval over an inverted index — the lexical similarity
     tier beside the embedding family (cosine/LSH/IVF): dedup catches
@@ -1995,19 +1990,12 @@ def bm25_topk(
     Returns (qid, rank, did, score_en4).
     """
     toks = docs.select("doc_id", F.explode(tokens_col()).alias("t"))
-    tf = toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
-    if materialize_tf:
-        # The term-frequency table feeds FOUR consumers (dl, df, postings,
-        # query terms); without materialization Spark re-tokenizes the
-        # corpus once per consumer. The production analog is landing the
-        # inverted index between pipeline stages — same contract as
-        # dedup.shingle_index. A caller that eagerly materializes the
-        # RESULT can free this corpus-scale scratch via scratch_out (the
-        # incremental_dedup convention, review r10 — otherwise it stays
-        # pinned in executor storage until driver GC).
-        tf = tf.localCheckpoint(eager=True)
-        if scratch_out is not None:
-            scratch_out.append(tf)
+    # The term-frequency table feeds FOUR consumers (dl, df, postings,
+    # query terms); without materialization Spark re-tokenizes the corpus
+    # once per consumer. The production analog is landing the inverted
+    # index between pipeline stages — same contract as
+    # dedup.shingle_index; the caller's io scope owns the checkpoint.
+    tf = checkpoint(toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf")))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(F.count(F.lit(1)).alias("N"), F.avg("dl").alias("avgdl"))
     dfreq = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
@@ -2334,8 +2322,8 @@ def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits harmonized rows for BOTH sub-legs: ('bpe_merge', rank, 'l r')
     for the learned rule sequence and ('bpe_seg', doc_id, md5 of the
     pieces) for the segmentation. The trained word table's checkpoint is
-    freed once the leg materializes."""
-    from ..io import free_local_checkpoint, session_cached
+    freed with the build scope once the leg materializes."""
+    from ..io import session_cached
     from .bpe import (
         BPE_GATE_MERGES,
         bpe_encode,
@@ -2367,10 +2355,8 @@ def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ONE segmentation feeds both the seg and ids legs (review r13:
         # the union has no cross-branch subtree reuse, so an uncheck-
         # pointed shared frame would still evaluate twice) — eager
-        # checkpoint, freed with the word table after `out` materializes
-        seg = bpe_segment(
-            docs, merges, encoded_words=words, ordered=False
-        ).localCheckpoint(eager=True)
+        # checkpoint, owned by the build scope like the word table
+        seg = checkpoint(bpe_segment(docs, merges, encoded_words=words, ordered=False))
         seg_rows = seg.select(
             F.lit("bpe_seg").alias("leg"),
             F.col("doc_id").alias("id"),
@@ -2399,14 +2385,11 @@ def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             zero.alias("m2"),
             zero.alias("m3"),
         )
-        out = (
+        return (
             merge_rows.unionByName(seg_rows)
             .unionByName(ids_rows)
             .localCheckpoint(eager=True)
         )
-        free_local_checkpoint(words)
-        free_local_checkpoint(seg)
-        return out
 
     return session_cached(_BPE_LEG_CACHE, spark, (sf_dir,), _build)
 
@@ -2449,19 +2432,14 @@ def _bigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached bigram-LM leg of the quality gate (ADVICE r10): the
     exploded pair subtree persists for the single build, the docs-sized
     result checkpoints once per (session, sf_dir), and the persisted
-    scratch frees deterministically after materialization — without this,
-    every gate call (bench samples 3x) leaked either a recompute of the
-    widest per-doc explode or an unfreeable per-call checkpoint."""
-    from ..io import free_local_checkpoint, session_cached
+    scratch frees with the build scope — without this, every gate call
+    (bench samples 3x) leaked either a recompute of the widest per-doc
+    explode or an unfreeable per-call checkpoint."""
+    from ..io import session_cached
 
     def _build() -> DataFrame:
-        scratch: list = []
-        out = bigram_logprob(
-            _docs_tokenized_cached(spark, sf_dir), scratch_out=scratch
-        ).localCheckpoint(eager=True)
-        for df in scratch:
-            df.unpersist()
-        return out
+        docs = _docs_tokenized_cached(spark, sf_dir)
+        return bigram_logprob(docs).localCheckpoint(eager=True)
 
     return session_cached(_BIGRAM_LEG_CACHE, spark, (sf_dir,), _build)
 
@@ -2483,22 +2461,14 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize; the DuckDB oracle restates the fusion over the same
     two branch queries (validated against an independent Python RRF
     before wiring)."""
-    from ..io import free_local_checkpoint, session_cached
+    from ..io import session_cached
     from .similarity import hybrid_rrf_topk, q_cosine_topk
 
     def _build() -> DataFrame:
-        scratch: list = []
-        out = bm25_topk(
-            load_table_parallel(spark, sf_dir, "documents"),
-            materialize_tf=True,
-            scratch_out=scratch,
-        ).localCheckpoint(eager=True)
-        # the per-(doc,term) inverted-index checkpoint is orders of
-        # magnitude larger than the 50-row result it built — free it
-        # once the result materializes (review r10)
-        for df in scratch:
-            free_local_checkpoint(df)
-        return out
+        # the per-(doc,term) inverted-index checkpoint, orders of magnitude
+        # larger than the 50-row result it builds, frees with the build scope
+        docs = load_table_parallel(spark, sf_dir, "documents")
+        return bm25_topk(docs).localCheckpoint(eager=True)
 
     bm = session_cached(_BM25_TOPK_CACHE, spark, (sf_dir,), _build)
     fused = hybrid_rrf_topk(bm, q_cosine_topk(spark, sf_dir))

@@ -9,10 +9,13 @@ records a rows-only check.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import io
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -29,7 +32,25 @@ _REGISTRY: dict[str, Entry] = {}
 def register(name: str, fn: QueryFn, oracle: str | None) -> None:
     if name in _REGISTRY:
         raise ValueError(f"duplicate query name {name!r}")
-    _REGISTRY[name] = Entry(fn, oracle)
+    _REGISTRY[name] = Entry(_owning_gate(fn), oracle)
+
+
+def _owning_gate(fn: QueryFn) -> QueryFn:
+    """Wrap a gate as the owner of the frames its call registers (the
+    io.scope rule). The returned DataFrame may be a lazy plan over them,
+    so they stay live after the call: the next call releases them first,
+    and so does the wrapper's ``release()``, for a caller that has
+    finished its action. One caller at a time per gate."""
+    owned: list = []
+
+    @functools.wraps(fn)
+    def gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+        io.release(owned)
+        with io.owning(owned):
+            return fn(spark, sf_dir)
+
+    gate.release = functools.partial(io.release, owned)
+    return gate
 
 
 def queries() -> dict[str, QueryFn]:

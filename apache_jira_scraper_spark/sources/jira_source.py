@@ -59,20 +59,24 @@ SCHEMA = "project string, payload string"
 
 
 class JiraPagePartition(InputPartition):
-    """A stripe of `n_pages` consecutive pages from one project's cursor
-    space. One page per partition matches the reference's protocol
-    exactly, but at task granularity the Python-worker dispatch overhead
-    dominates sub-second page fetches — striping k pages per task keeps
-    the same parallel-cursor scan shape (this is how production REST
-    scans shard: a worker walks a cursor range) with 1/k the task count.
-    The streaming reader keeps single-page partitions: its micro-batches
-    are already bounded by max_pages_per_trigger."""
+    """A stripe of consecutive pages from one project's cursor space: the
+    row offsets [start_at, end_at), fetched `max_results` at a time (one
+    page when end_at is omitted). One page per partition matches the
+    reference's protocol exactly, but at task granularity the
+    Python-worker dispatch overhead dominates sub-second page fetches —
+    striping k pages per task keeps the same parallel-cursor scan shape
+    (this is how production REST scans shard: a worker walks a cursor
+    range) with 1/k the task count. The streaming reader keeps
+    single-page partitions: its micro-batches are already bounded by
+    max_pages_per_trigger."""
 
-    def __init__(self, project: str, start_at: int, max_results: int, n_pages: int = 1):
+    def __init__(
+        self, project: str, start_at: int, max_results: int, end_at: int | None = None
+    ):
         self.project = project
         self.start_at = start_at
         self.max_results = max_results
-        self.n_pages = n_pages
+        self.end_at = start_at + max_results if end_at is None else end_at
 
 
 def _fetch_page(
@@ -157,14 +161,14 @@ def _page_rows(opts: _Options, part: JiraPagePartition) -> Iterator[tuple[str, s
     # stay disjoint). A short page under contiguous stepping means the
     # cursor range is genuinely exhausted; an EMPTY page means the total
     # shrank mid-scan (this stripe's tail no longer exists) — both end the
-    # stripe. Rows created after the planner's total probe land at offsets
-    # past the planned stripes and are picked up by the next incremental
-    # scan (bounded-snapshot batch semantics; the streaming reader's
-    # cursor covers them).
-    span_end = part.start_at + getattr(part, "n_pages", 1) * part.max_results
+    # stripe. The planner ends the last stripe at the probed total, so no
+    # request goes past the last row; rows created after the probe land
+    # at offsets past the planned stripes and are picked up by the next
+    # incremental scan (bounded-snapshot batch semantics; the streaming
+    # reader's cursor covers them).
     cur = part.start_at
-    while cur < span_end:
-        want = min(part.max_results, span_end - cur)
+    while cur < part.end_at:
+        want = min(part.max_results, part.end_at - cur)
         data = opts.fetch(part.project, cur, want)
         issues = data.get("issues", [])
         if not issues:
@@ -213,10 +217,7 @@ class JiraBatchReader(DataSourceReader):
             for first_page in range(0, n_pages_total, ppp):
                 parts.append(
                     JiraPagePartition(
-                        project,
-                        first_page * ps,
-                        ps,
-                        min(ppp, n_pages_total - first_page),
+                        project, first_page * ps, ps, min((first_page + ppp) * ps, total)
                     )
                 )
         return parts or [JiraPagePartition(self.opts.projects[0], 0, ps)]

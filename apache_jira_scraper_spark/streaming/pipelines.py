@@ -16,8 +16,13 @@ maxFilesPerTrigger) and a memory sink.
 
 from __future__ import annotations
 
+import contextvars
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..io import checkpoint, own, scope
 
 # deterministic unpersist of superseded state checkpoints (shared with
 # the iterative operators — see io.free_local_checkpoint's contract)
@@ -258,6 +263,20 @@ def write_idempotent_parquet(stream: DataFrame, out_dir: str, checkpoint_dir: st
     )
 
 
+def _batch_scoped(body):
+    """An ingest sink's foreachBatch function that runs `body` in an io
+    scope: the batch's intermediates are freed when it ends, whether the
+    write succeeded or not. Tier segments are not the batch's: they are
+    state that outlives it, owned through their _TieredSegments store."""
+
+    @functools.wraps(body)
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        with scope():
+            body(batch_df, batch_id)
+
+    return sink
+
+
 def _write_with_segment_checkpoints(write, segments: list[DataFrame]) -> list[DataFrame]:
     """Run `write()` and an eager localCheckpoint of each segment on
     concurrent driver threads (guide §2.6, overlap independent jobs: the
@@ -355,6 +374,7 @@ def streaming_dedup_ingest(
             compact_every, [init_sig] if init_sig is not None else []
         )
 
+    @_batch_scoped
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.dedup import incremental_dedup
 
@@ -365,12 +385,10 @@ def streaming_dedup_ingest(
         if batch_df is None:
             return  # committed replay: exactly-once output, state already has it
         sh_u, sig_u = sh_tier.union(), sig_tier.union()
-        scratch: list = []
         parts: list = []
         kept, _ = incremental_dedup(
             batch_df,
             (sh_u, sig_u) if sh_u is not None else None,
-            scratch_out=scratch,
             kept_parts_out=parts,
         )
         # batch_id lives ONLY in the directory name: writing it as a data
@@ -398,8 +416,6 @@ def streaming_dedup_ingest(
         # tier merges amortize the rest (r09)
         sh_tier.add(sh_ck, batch_id)
         sig_tier.add(sig_ck, batch_id)
-        for df in scratch:  # incremental_dedup's internal checkpoints —
-            _free_local_checkpoint(df)  # superseded once the segments landed
 
     return (
         doc_stream.writeStream.foreachBatch(sink)
@@ -656,7 +672,11 @@ class _TieredSegments:
     the store's load() entries — (df, path, level) tuples, resumed at
     their recorded levels — alongside plain DataFrames (persisted on
     entry when a store is attached). Freeing a resumed parquet-scan
-    segment is a benign no-op inside free_local_checkpoint."""
+    segment is a benign no-op inside free_local_checkpoint.
+
+    Segments are the stream's state, never a batch's: each is owned by
+    the io scope open where the store was built, if any (a gate that runs
+    its stream to completion frees the state with its set)."""
 
     def __init__(self, fanout: int, initial=None, initial_level: int = 1,
                  store: "DurableSegmentStore | None" = None):
@@ -665,14 +685,17 @@ class _TieredSegments:
         self.fanout = fanout
         self.store = store
         self.tiers: dict[int, list[tuple[DataFrame, str | None]]] = {}
+        # add() runs on the sink's callback thread: register there in the
+        # context the store was built in
+        self._owner = contextvars.copy_context()
         fresh = False
         for item in initial or []:
             if isinstance(item, tuple):
                 df, path, lvl = item  # a DurableSegmentStore.load() entry
-                self.tiers.setdefault(lvl, []).append((df, path))
+                self.tiers.setdefault(lvl, []).append((own(df), path))
             else:
                 path = store.persist(item, initial_level) if store else None
-                self.tiers.setdefault(initial_level, []).append((item, path))
+                self.tiers.setdefault(initial_level, []).append((own(item), path))
                 fresh = True
         if store and fresh:
             # rebuild-provided initial state becomes durable immediately
@@ -699,14 +722,13 @@ class _TieredSegments:
         from functools import reduce
 
         path = self.store.persist(segment, 0) if self.store else None
-        self.tiers.setdefault(0, []).append((segment, path))
+        self.tiers.setdefault(0, []).append((self._owner.run(own, segment), path))
         lvl = 0
         replaced: list[str] = []
         while len(self.tiers.get(lvl, ())) >= self.fanout:
             olds = self.tiers[lvl]
-            merged = reduce(
-                DataFrame.unionByName, [df for df, _ in olds]
-            ).localCheckpoint(eager=True)
+            merged = reduce(DataFrame.unionByName, [df for df, _ in olds])
+            merged = self._owner.run(own, merged.localCheckpoint(eager=True))
             mpath = self.store.persist(merged, lvl + 1) if self.store else None
             self.tiers[lvl] = []
             self.tiers.setdefault(lvl + 1, []).append((merged, mpath))
@@ -910,6 +932,7 @@ def streaming_media_dedup_ingest(
             .select(F.col(b_col).alias("doc_id"))
         )
 
+    @_batch_scoped
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _ingest_batch_guard(batch_df, out_dir, batch_id)
         if batch_df is None:
@@ -919,13 +942,13 @@ def streaming_media_dedup_ingest(
             # id-replay guard: re-delivered docs (including undecodable /
             # degenerate ones the perceptual path cannot see) drop here
             batch_df = batch_df.join(ids_union, "doc_id", "left_anti")
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = checkpoint(batch_df)
         ph = hasher(batch_df)
         if "frame_idx" not in ph.columns:
             ph = ph.withColumn("frame_idx", F.lit(0))
         # the hash table feeds three consumers (within-batch self-join
         # sides + the index join + the kept-segment advance): decode once
-        ph = ph.localCheckpoint(eager=True)
+        ph = checkpoint(ph)
         # left_anti is duplicate-insensitive: no distinct needed on drops
         drops = _pair_drops(
             _phash_verified_pairs(ph, max_hamming, max_block_freq),
@@ -943,9 +966,7 @@ def streaming_media_dedup_ingest(
                     "new_doc",
                 )
             )
-        kept = batch_df.join(drops, "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        kept = checkpoint(batch_df.join(drops, "doc_id", "left_anti"))
         # r14 (guide §2.6): the survivor write and the two O(batch) state
         # segments are independent jobs over the materialized `kept`/`ph`
         # checkpoints — overlap them on driver threads; tier adds still
@@ -958,11 +979,6 @@ def streaming_media_dedup_ingest(
         # state advances are O(batch) on BOTH tables; tier merges amortize
         ids_tier.add(ids_ck, batch_id)
         seg_tier.add(seg_ck, batch_id)
-        # per-batch intermediates: every eager derivative (write, ids
-        # segment, hash segment) has materialized — free deterministically
-        _free_local_checkpoint(ph)
-        _free_local_checkpoint(kept)
-        _free_local_checkpoint(batch_df)
 
     return (
         media_stream.writeStream.foreachBatch(sink)

@@ -120,6 +120,9 @@ def main() -> None:
                 break
             if runs[-1] > resample_cutoff_s:
                 break
+        # free the frames the gate's last sample registered, instead of
+        # holding every gate's last set until exit
+        qs[name].release()
         all_runs[name] = runs
         if _io.SESSION_CACHE_TOUCHES > touches_before:
             cached.append(name)

@@ -251,21 +251,29 @@ def test_bpe_encode_join_path_matches_fold(spark):
 
 def test_bpe_segment_fold_scratch_ownership(spark):
     """ADVICE r12: the fold path's superseded checkpoints are freed as
-    successors materialize; the final checkpoint is handed to the caller
-    via scratch_out (at most one live entry)."""
-    from apache_jira_scraper_spark.io import free_local_checkpoint
+    successors materialize; only the final one, which backs the result,
+    stays live, owned by the caller's io scope until it closes."""
+    from apache_jira_scraper_spark.io import scope
     from apache_jira_scraper_spark.operators.bpe import bpe_segment, bpe_train
+
+    def persistent_ids():
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
 
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
     merges, _ = bpe_train(docs, n_merges=10)
-    scratch: list = []
-    out = bpe_segment(docs, merges, checkpoint_every=3, scratch_out=scratch)
-    assert len(scratch) == 1
-    got = {r["doc_id"]: list(r["pieces"]) for r in out.collect()}
+    with scope() as owned:
+        out = bpe_segment(docs, merges, checkpoint_every=3)
+        ids = {df._jdf.queryExecution().analyzed().rdd().id() for df in owned}
+        assert len(ids) == 3  # one checkpoint per 3 of the 10 merges
+        assert len(ids & persistent_ids()) == 1
+        got = {r["doc_id"]: list(r["pieces"]) for r in out.collect()}
     for doc_id, text in CORPUS:
         assert got[doc_id] == _ref_segment(text, merges), doc_id
-    for df in scratch:
-        free_local_checkpoint(df)
+    assert not ids & persistent_ids()
 
 
 def test_bpe_gate_sql_matches_reference():

@@ -198,30 +198,32 @@ def test_dedup_family_does_not_broadcast_corpus_sized_sides(spark, sf_dir):
     OOM-at-100TB hazard); AQE remains free at runtime to broadcast any
     side it MEASURES small. Checked on the UNCACHED builders so the whole
     build subtree (not a checkpoint leaf) is in the plan."""
+    from apache_jira_scraper_spark.io import scope
     from apache_jira_scraper_spark.operators import dedup
     from apache_jira_scraper_spark.plans.inspect import physical_plan
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        sh = dedup.shingle_index(spark, sf_dir)
-        pairs, scratch = dedup._minhash_pairs_uncached(spark, sf_dir)
-        cand = pairs.select("d1", "d2").limit(10)
-        plans = {
-            "minhash_pairs": physical_plan(pairs, "simple"),
-            "verify_jaccard": physical_plan(dedup._verify_jaccard(sh, cand), "simple"),
-            "ngram_jaccard": physical_plan(
-                dedup.q_dedup_ngram_jaccard(spark, sf_dir), "simple"
-            ),
-            "simhash": physical_plan(dedup.q_dedup_simhash(spark, sf_dir), "simple"),
-            "embedding_cosine": physical_plan(
-                dedup.q_dedup_embedding_cosine(spark, sf_dir), "simple"
-            ),
-        }
+        with scope():
+            sh = dedup.shingle_index(spark, sf_dir)
+            pairs = dedup._minhash_pairs_uncached(spark, sf_dir)
+            cand = pairs.select("d1", "d2").limit(10)
+            plans = {
+                "minhash_pairs": physical_plan(pairs, "simple"),
+                "verify_jaccard": physical_plan(
+                    dedup._verify_jaccard(sh, cand), "simple"
+                ),
+                "ngram_jaccard": physical_plan(
+                    dedup.q_dedup_ngram_jaccard(spark, sf_dir), "simple"
+                ),
+                "simhash": physical_plan(dedup.q_dedup_simhash(spark, sf_dir), "simple"),
+                "embedding_cosine": physical_plan(
+                    dedup.q_dedup_embedding_cosine(spark, sf_dir), "simple"
+                ),
+            }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        for df in scratch:
-            df.unpersist()
     for name, plan in plans.items():
         assert "BroadcastExchange" not in plan, (name, plan[:1500])
 

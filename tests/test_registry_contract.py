@@ -46,3 +46,43 @@ def test_oracle_coverage_is_total_except_streaming():
     assert qs - oracles <= {"stream_stateful", "stream_tumbling_counts"}, (
         qs - oracles
     )
+
+
+def test_gate_wrappers_keep_their_module_and_release():
+    """Each entry wraps its gate as the owner of the frames a call
+    registers (io.scope). The wrapper keeps the operator module that
+    defines the gate (perfbench groups gates by it) and exposes release();
+    a second release() is a no-op."""
+    import sys
+
+    for name, fn in registry.queries().items():
+        assert fn.__module__.startswith("apache_jira_scraper_spark.operators."), name
+        assert getattr(sys.modules[fn.__module__], fn.__name__) is fn.__wrapped__, name
+        fn.release()
+        fn.release()
+
+
+def test_gate_wrapper_frees_a_call_set_on_the_next_call_and_on_release(spark):
+    """A call's owned checkpoint outlives the call (the gate may return a
+    lazy plan over it), is freed when the gate is called again, and the
+    last call's set is freed by release(); releasing twice is harmless."""
+    from apache_jira_scraper_spark import io
+
+    made = []
+
+    def q_probe(spark, sf_dir):
+        made.append(io.checkpoint(spark.range(4)))
+        return made[-1].selectExpr("id * 2 AS v")
+
+    def live(df) -> bool:
+        level = df._jdf.queryExecution().analyzed().rdd().getStorageLevel()
+        return level.useMemory() or level.useDisk()
+
+    gate = registry._owning_gate(q_probe)
+    assert (gate.__name__, gate.__module__) == ("q_probe", __name__)
+    assert gate(spark, "").count() == 4 and live(made[0])
+    gate(spark, "")
+    assert not live(made[0]) and live(made[1])
+    gate.release()
+    gate.release()
+    assert not live(made[1])

@@ -471,11 +471,14 @@ def test_free_local_checkpoint_failure_is_detectable(spark):
     assert io_mod.FREE_CHECKPOINT_FAILURES == n + 1
 
 
-def test_segment_checkpoint_failure_frees_the_landed_segment(monkeypatch):
+def test_segment_checkpoint_failure_frees_the_landed_segment(spark, tmp_path, monkeypatch):
     """ADVICE r14 #2: the ingest sinks overlap the survivor write with two
     segment checkpoints. Whichever job fails first, every segment
     checkpoint that did land is freed, the write's outcome is observed,
-    and the first error (the write's, if it failed) reaches the query."""
+    and the first error (the write's, if it failed) reaches the query.
+    Then both real sinks, over one real batch each whose write fails:
+    the batch's own intermediates go too (its io scope), so the
+    persistent RDDs return to their pre-batch set."""
     freed: list = []
     monkeypatch.setattr(pipelines, "_free_local_checkpoint", freed.append)
 
@@ -516,6 +519,69 @@ def test_segment_checkpoint_failure_frees_the_landed_segment(monkeypatch):
         _write_ok, [_Segment("ck_a"), _Segment("ck_b")]
     )
     assert got == ["ck_a", "ck_b"] and freed == []
+
+    import numpy as np
+    from pyspark.sql import DataFrameWriter
+
+    monkeypatch.undo()
+
+    def _write_fails_for_real(self, *args, **kwargs):
+        raise OSError("write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", _write_fails_for_real)
+
+    class _Stream:
+        """Stands in for the source stream: the sink builders hand their
+        foreachBatch function to it instead of starting a query."""
+
+        def __init__(self):
+            self.writeStream = self
+
+        def foreachBatch(self, fn):  # noqa: N802
+            self.sink = fn
+            return self
+
+        def option(self, *args):
+            return self
+
+        def trigger(self, **kwargs):
+            return self
+
+        def start(self):
+            return self.sink
+
+    def persistent_ids():
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
+
+    words = lambda i: " ".join(f"d{i}w{j}" for j in range(12))  # noqa: E731
+    rng = np.random.default_rng(5)
+    img = rng.integers(0, 256, (16, 18), dtype=np.uint8)
+    near = img.copy()
+    near[0, 0] ^= 1
+    for sink, batch in (
+        (
+            pipelines.streaming_dedup_ingest(_Stream(), str(tmp_path / "t"), ""),
+            spark.createDataFrame(
+                [(0, words(0)), (1, words(0) + " tail"), (2, words(2))],
+                "doc_id long, text string",
+            ),
+        ),
+        (
+            pipelines.streaming_media_dedup_ingest(_Stream(), str(tmp_path / "m"), ""),
+            spark.createDataFrame(
+                [(10, bytearray(_pgm(img))), (11, bytearray(_pgm(near)))],
+                "doc_id long, content binary",
+            ),
+        ),
+    ):
+        before = persistent_ids()
+        with pytest.raises(OSError, match="write failed"):
+            sink(batch, 0)
+        assert not persistent_ids() - before
 
 
 def test_streaming_media_dedup_ingest_segment_compaction(spark, tmp_path):
