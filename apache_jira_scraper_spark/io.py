@@ -172,8 +172,13 @@ def scope():
       over frames it owns, so that set is kept on the wrapper (`owning`)
       and released on the gate's next call or by the wrapper's
       `release()`.
-    - the streaming ingest sinks run each micro-batch body in one; their
-      tier segments stay unowned, because they are state.
+    - the streaming ingest sinks run each micro-batch body in one, so a
+      batch's intermediates are freed whether its write succeeded or not.
+      Tier segments are the stream's state, not a batch's: a segment
+      store registers every segment it holds with the scope open where
+      the store was built, and `disown`s each one a merge frees. That
+      scope must outlive the stream's last batch (a gate that builds a
+      stream awaits its termination before returning).
 
     With no scope open a frame is unowned: a checkpoint waits for driver
     GC + ContextCleaner, a persisted frame stays cached until someone
@@ -206,6 +211,14 @@ def own(df: DataFrame) -> DataFrame:
     if frames is not None:
         frames.append(df)
     return df
+
+
+def disown(df: DataFrame) -> None:
+    """Drop `df` from the innermost open scope without freeing it, for an
+    owner that has freed it itself (a no-op when none is open)."""
+    frames = _SCOPE.get()
+    if frames is not None:
+        frames[:] = [f for f in frames if f is not df]
 
 
 def checkpoint(df: DataFrame) -> DataFrame:

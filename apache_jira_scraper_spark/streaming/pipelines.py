@@ -17,12 +17,11 @@ maxFilesPerTrigger) and a memory sink.
 from __future__ import annotations
 
 import contextvars
-import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import checkpoint, own, scope
+from ..io import checkpoint, disown, own, scope
 
 # deterministic unpersist of superseded state checkpoints (shared with
 # the iterative operators — see io.free_local_checkpoint's contract)
@@ -263,20 +262,6 @@ def write_idempotent_parquet(stream: DataFrame, out_dir: str, checkpoint_dir: st
     )
 
 
-def _batch_scoped(body):
-    """An ingest sink's foreachBatch function that runs `body` in an io
-    scope: the batch's intermediates are freed when it ends, whether the
-    write succeeded or not. Tier segments are not the batch's: they are
-    state that outlives it, owned through their _TieredSegments store."""
-
-    @functools.wraps(body)
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        with scope():
-            body(batch_df, batch_id)
-
-    return sink
-
-
 def _write_with_segment_checkpoints(write, segments: list[DataFrame]) -> list[DataFrame]:
     """Run `write()` and an eager localCheckpoint of each segment on
     concurrent driver threads (guide §2.6, overlap independent jobs: the
@@ -374,48 +359,48 @@ def streaming_dedup_ingest(
             compact_every, [init_sig] if init_sig is not None else []
         )
 
-    @_batch_scoped
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.dedup import incremental_dedup
 
-        # committed-replay skip + under-parallel fan-out: shared with the
-        # media sink (_ingest_batch_guard — the single-partition batch was
-        # measured as the ingest leg's whole critical path at sf0.1)
-        batch_df = _ingest_batch_guard(batch_df, out_dir, batch_id)
-        if batch_df is None:
-            return  # committed replay: exactly-once output, state already has it
-        sh_u, sig_u = sh_tier.union(), sig_tier.union()
-        parts: list = []
-        kept, _ = incremental_dedup(
-            batch_df,
-            (sh_u, sig_u) if sh_u is not None else None,
-            kept_parts_out=parts,
-        )
-        # batch_id lives ONLY in the directory name: writing it as a data
-        # column too made every read of out_dir resolve a duplicate
-        # (COLUMN_ALREADY_EXISTS warning; partition schema happened to win
-        # — review r06). Partition discovery reconstitutes the column.
-        # `kept` feeds ONLY this write (the index advance derives from the
-        # batch shingle/signature checkpoints, not from kept), so no
-        # re-checkpoint before it — one fewer job per batch (r09 profile).
-        #
-        # r14 (guide §2.6, overlap independent jobs): the survivor write
-        # and the two O(batch) segment checkpoints are three independent
-        # jobs over already-materialized inputs (losers is an eager
-        # checkpoint; sh_new/sig_new land on first use) — run them on
-        # concurrent driver threads so the batch pays the slowest, not the
-        # sum. The REPLAY CONTRACT is untouched: checkpointing a segment
-        # is not a state advance — tier.add() below still runs only after
-        # the write proves the batch directory committed; if any of the
-        # three jobs fails, the segment checkpoints that landed are freed.
-        sh_ck, sig_ck = _write_with_segment_checkpoints(
-            lambda: kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}"),
-            parts,
-        )
-        # O(batch) state advance: only this batch's kept index segment;
-        # tier merges amortize the rest (r09)
-        sh_tier.add(sh_ck, batch_id)
-        sig_tier.add(sig_ck, batch_id)
+        with scope():  # the batch's intermediates, freed written or not
+            # committed-replay skip + under-parallel fan-out: shared with the
+            # media sink (_ingest_batch_guard — the single-partition batch was
+            # measured as the ingest leg's whole critical path at sf0.1)
+            batch_df = _ingest_batch_guard(batch_df, out_dir, batch_id)
+            if batch_df is None:
+                return  # committed replay: exactly-once output, state already has it
+            sh_u, sig_u = sh_tier.union(), sig_tier.union()
+            parts: list = []
+            kept, _ = incremental_dedup(
+                batch_df,
+                (sh_u, sig_u) if sh_u is not None else None,
+                kept_parts_out=parts,
+            )
+            # batch_id lives ONLY in the directory name: writing it as a data
+            # column too made every read of out_dir resolve a duplicate
+            # (COLUMN_ALREADY_EXISTS warning; partition schema happened to win
+            # — review r06). Partition discovery reconstitutes the column.
+            # `kept` feeds ONLY this write (the index advance derives from the
+            # batch shingle/signature checkpoints, not from kept), so no
+            # re-checkpoint before it — one fewer job per batch (r09 profile).
+            #
+            # r14 (guide §2.6, overlap independent jobs): the survivor write
+            # and the two O(batch) segment checkpoints are three independent
+            # jobs over already-materialized inputs (losers is an eager
+            # checkpoint; sh_new/sig_new land on first use) — run them on
+            # concurrent driver threads so the batch pays the slowest, not the
+            # sum. The REPLAY CONTRACT is untouched: checkpointing a segment
+            # is not a state advance — tier.add() below still runs only after
+            # the write proves the batch directory committed; if any of the
+            # three jobs fails, the segment checkpoints that landed are freed.
+            sh_ck, sig_ck = _write_with_segment_checkpoints(
+                lambda: kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}"),
+                parts,
+            )
+            # O(batch) state advance: only this batch's kept index segment;
+            # tier merges amortize the rest (r09)
+            sh_tier.add(sh_ck, batch_id)
+            sig_tier.add(sig_ck, batch_id)
 
     return (
         doc_stream.writeStream.foreachBatch(sink)
@@ -675,8 +660,8 @@ class _TieredSegments:
     segment is a benign no-op inside free_local_checkpoint.
 
     Segments are the stream's state, never a batch's: each is owned by
-    the io scope open where the store was built, if any (a gate that runs
-    its stream to completion frees the state with its set)."""
+    the io scope open where the store was built, if any, until a merge
+    frees it (see io.scope)."""
 
     def __init__(self, fanout: int, initial=None, initial_level: int = 1,
                  store: "DurableSegmentStore | None" = None):
@@ -734,6 +719,7 @@ class _TieredSegments:
             self.tiers.setdefault(lvl + 1, []).append((merged, mpath))
             for old, opath in olds:  # freed only post-merge
                 _free_local_checkpoint(old)
+                self._owner.run(disown, old)
                 if opath is not None:
                     replaced.append(opath)
             lvl += 1
@@ -932,53 +918,53 @@ def streaming_media_dedup_ingest(
             .select(F.col(b_col).alias("doc_id"))
         )
 
-    @_batch_scoped
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _ingest_batch_guard(batch_df, out_dir, batch_id)
-        if batch_df is None:
-            return  # committed replay: output and state already have it
-        ids_union = ids_tier.union()
-        if ids_union is not None:
-            # id-replay guard: re-delivered docs (including undecodable /
-            # degenerate ones the perceptual path cannot see) drop here
-            batch_df = batch_df.join(ids_union, "doc_id", "left_anti")
-        batch_df = checkpoint(batch_df)
-        ph = hasher(batch_df)
-        if "frame_idx" not in ph.columns:
-            ph = ph.withColumn("frame_idx", F.lit(0))
-        # the hash table feeds three consumers (within-batch self-join
-        # sides + the index join + the kept-segment advance): decode once
-        ph = checkpoint(ph)
-        # left_anti is duplicate-insensitive: no distinct needed on drops
-        drops = _pair_drops(
-            _phash_verified_pairs(ph, max_hamming, max_block_freq),
-            "doc_a",
-            "doc_b",
-        )
-        index_ph = seg_tier.union()
-        if index_ph is not None:
-            drops = drops.unionByName(
-                _pair_drops(
-                    media_near_dup_against_index(
-                        ph, index_ph, max_hamming, max_block_freq
-                    ),
-                    "index_doc",
-                    "new_doc",
-                )
+        with scope():
+            batch_df = _ingest_batch_guard(batch_df, out_dir, batch_id)
+            if batch_df is None:
+                return  # committed replay: output and state already have it
+            ids_union = ids_tier.union()
+            if ids_union is not None:
+                # id-replay guard: re-delivered docs (including undecodable /
+                # degenerate ones the perceptual path cannot see) drop here
+                batch_df = batch_df.join(ids_union, "doc_id", "left_anti")
+            batch_df = checkpoint(batch_df)
+            ph = hasher(batch_df)
+            if "frame_idx" not in ph.columns:
+                ph = ph.withColumn("frame_idx", F.lit(0))
+            # the hash table feeds three consumers (within-batch self-join
+            # sides + the index join + the kept-segment advance): decode once
+            ph = checkpoint(ph)
+            # left_anti is duplicate-insensitive: no distinct needed on drops
+            drops = _pair_drops(
+                _phash_verified_pairs(ph, max_hamming, max_block_freq),
+                "doc_a",
+                "doc_b",
             )
-        kept = checkpoint(batch_df.join(drops, "doc_id", "left_anti"))
-        # r14 (guide §2.6): the survivor write and the two O(batch) state
-        # segments are independent jobs over the materialized `kept`/`ph`
-        # checkpoints — overlap them on driver threads; tier adds still
-        # gate on the write (state advances only after the batch directory
-        # committed); landed segments are freed if any of the jobs fails.
-        ids_ck, seg_ck = _write_with_segment_checkpoints(
-            lambda: kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}"),
-            [kept.select("doc_id"), ph.join(kept.select("doc_id"), "doc_id", "left_semi")],
-        )
-        # state advances are O(batch) on BOTH tables; tier merges amortize
-        ids_tier.add(ids_ck, batch_id)
-        seg_tier.add(seg_ck, batch_id)
+            index_ph = seg_tier.union()
+            if index_ph is not None:
+                drops = drops.unionByName(
+                    _pair_drops(
+                        media_near_dup_against_index(
+                            ph, index_ph, max_hamming, max_block_freq
+                        ),
+                        "index_doc",
+                        "new_doc",
+                    )
+                )
+            kept = checkpoint(batch_df.join(drops, "doc_id", "left_anti"))
+            # r14 (guide §2.6): the survivor write and the two O(batch) state
+            # segments are independent jobs over the materialized `kept`/`ph`
+            # checkpoints — overlap them on driver threads; tier adds still
+            # gate on the write (state advances only after the batch directory
+            # committed); landed segments are freed if any of the jobs fails.
+            ids_ck, seg_ck = _write_with_segment_checkpoints(
+                lambda: kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}"),
+                [kept.select("doc_id"), ph.join(kept.select("doc_id"), "doc_id", "left_semi")],
+            )
+            # state advances are O(batch) on BOTH tables; tier merges amortize
+            ids_tier.add(ids_ck, batch_id)
+            seg_tier.add(seg_ck, batch_id)
 
     return (
         media_stream.writeStream.foreachBatch(sink)

@@ -33,6 +33,17 @@ def run_oracle(sql: str, sf_dir: str) -> tuple[list[str], list[tuple]]:
         _return_freed_heap()
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of every RDD the session holds persisted: checkpoints and cached
+    frames. Compare specific ids, not counts: the shared session's async
+    ContextCleaner may reclaim unrelated RDDs between two snapshots."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
 def _return_freed_heap() -> None:
     """Hand the memory a closed DuckDB connection freed back to the OS.
     glibc keeps freed arena pages mapped: after the text_quality_signals

@@ -8,6 +8,8 @@ from collections import Counter
 
 import pytest
 
+from tests.oracle_utils import persistent_rdd_ids
+
 
 def _ref_bpe(word_freqs: dict[str, int], n_merges: int):
     """Sennrich et al. 2016 reference: pair counts over the word-freq
@@ -256,24 +258,17 @@ def test_bpe_segment_fold_scratch_ownership(spark):
     from apache_jira_scraper_spark.io import scope
     from apache_jira_scraper_spark.operators.bpe import bpe_segment, bpe_train
 
-    def persistent_ids():
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
     merges, _ = bpe_train(docs, n_merges=10)
     with scope() as owned:
         out = bpe_segment(docs, merges, checkpoint_every=3)
         ids = {df._jdf.queryExecution().analyzed().rdd().id() for df in owned}
         assert len(ids) == 3  # one checkpoint per 3 of the 10 merges
-        assert len(ids & persistent_ids()) == 1
+        assert len(ids & persistent_rdd_ids(spark)) == 1
         got = {r["doc_id"]: list(r["pieces"]) for r in out.collect()}
     for doc_id, text in CORPUS:
         assert got[doc_id] == _ref_segment(text, merges), doc_id
-    assert not ids & persistent_ids()
+    assert not ids & persistent_rdd_ids(spark)
 
 
 def test_bpe_gate_sql_matches_reference():

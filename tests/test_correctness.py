@@ -16,19 +16,11 @@ import pytest
 from pyspark.sql import DataFrame
 
 from apache_jira_scraper_spark import registry
-from tests.oracle_utils import assert_matches_oracle
+from tests.oracle_utils import assert_matches_oracle, persistent_rdd_ids
 from tests.test_cache_inventory import EXPECTED_CACHES
 
 _QUERIES = registry.queries()
 _ORACLES = registry.oracle_sql()
-
-
-def _persistent_rdd_ids(spark) -> set[int]:
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
 
 
 def _session_cache_rdd_ids() -> set[int]:
@@ -59,10 +51,10 @@ def _session_cache_rdd_ids() -> set[int]:
 
 @contextmanager
 def _leaves_only_session_caches(spark, name: str):
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     yield
     _QUERIES[name].release()
-    leaked = _persistent_rdd_ids(spark) - before
+    leaked = persistent_rdd_ids(spark) - before
     if leaked:
         leaked -= _session_cache_rdd_ids()
     assert not leaked, f"{name} left persistent RDDs outside the session caches: {leaked}"

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from apache_jira_scraper_spark.io import load_table
 from apache_jira_scraper_spark.streaming import pipelines
 from tests.conftest import TEST_SF_DIR
+from tests.oracle_utils import persistent_rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -374,22 +375,12 @@ def test_free_local_checkpoint_drops_storage(spark):
         _free_local_checkpoint,
     )
 
-    def persistent_ids():
-        # track SPECIFIC RDD ids, not counts: the shared session's async
-        # ContextCleaner may reclaim unrelated leaked checkpoints between
-        # snapshots (review r08 flake)
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-
-    before = persistent_ids()
+    before = persistent_rdd_ids(spark)
     df = spark.range(10).localCheckpoint(eager=True)
-    new_ids = persistent_ids() - before
+    new_ids = persistent_rdd_ids(spark) - before
     assert len(new_ids) == 1
     _free_local_checkpoint(df)
-    assert not (new_ids & persistent_ids())
+    assert not (new_ids & persistent_rdd_ids(spark))
     _free_local_checkpoint(None)  # no-op
     _free_local_checkpoint(spark.range(3))  # not checkpointed: swallowed
 
@@ -550,13 +541,6 @@ def test_segment_checkpoint_failure_frees_the_landed_segment(spark, tmp_path, mo
         def start(self):
             return self.sink
 
-    def persistent_ids():
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-
     words = lambda i: " ".join(f"d{i}w{j}" for j in range(12))  # noqa: E731
     rng = np.random.default_rng(5)
     img = rng.integers(0, 256, (16, 18), dtype=np.uint8)
@@ -578,10 +562,10 @@ def test_segment_checkpoint_failure_frees_the_landed_segment(spark, tmp_path, mo
             ),
         ),
     ):
-        before = persistent_ids()
+        before = persistent_rdd_ids(spark)
         with pytest.raises(OSError, match="write failed"):
             sink(batch, 0)
-        assert not persistent_ids() - before
+        assert not persistent_rdd_ids(spark) - before
 
 
 def test_streaming_media_dedup_ingest_segment_compaction(spark, tmp_path):
@@ -755,11 +739,7 @@ def test_media_ingest_normalizes_bare_segments(spark, tmp_path):
     )
     # normalization happens at sink construction: the caller's bare
     # segment must already be freed (specific RDD id, review-r08 style)
-    live = set()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
-    while it.hasNext():
-        live.add(it.next())
-    assert seg_rdd_id not in live, "caller's bare segment not freed"
+    assert seg_rdd_id not in persistent_rdd_ids(spark), "caller's bare segment not freed"
     q.awaitTermination()
     kept = {
         r["doc_id"] for r in spark.read.parquet(str(tmp_path / "out")).collect()
@@ -772,41 +752,46 @@ def test_tiered_segments_compaction_touches_only_merged_tier(spark):
     that filled — higher-level segments are neither rewritten nor freed
     by a lower-level compaction — and a full cascade merges upward one
     level at a time. Freed segments are tracked by SPECIFIC RDD id
-    (asserting counts on the shared session flakes, review r08)."""
+    (asserting counts on the shared session flakes, review r08). The io
+    scope the store was built in owns only its live segments."""
+    from apache_jira_scraper_spark.io import scope
     from apache_jira_scraper_spark.streaming.pipelines import _TieredSegments
 
     def rdd_id(df):
         return df._jdf.queryExecution().analyzed().rdd().id()
 
     def persisted(ids):
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
-        live = set()
-        while it.hasNext():
-            live.add(it.next())
-        return ids & live
+        return ids & persistent_rdd_ids(spark)
 
     def seg(lo, hi):
         return spark.range(lo, hi).localCheckpoint(eager=True)
 
-    tiers = _TieredSegments(fanout=2)
-    tiers.add(seg(0, 1))
-    tiers.add(seg(1, 2))  # level-0 full -> merge to level 1
-    assert [lvl for lvl, dfs in sorted(tiers.tiers.items()) if dfs] == [1]
-    l1 = tiers.tiers[1][0][0]  # entries are (df, durable_path) since r10
-    l1_id = rdd_id(l1)
-    s2 = seg(2, 3)
-    s2_id = rdd_id(s2)
-    tiers.add(s2)  # level 0 holds one segment; level 1 untouched
-    assert tiers.tiers[1][0][0] is l1, "level-1 segment rewritten by level-0 add"
-    assert persisted({l1_id, s2_id}) == {l1_id, s2_id}
-    union_rows = {r["id"] for r in tiers.union().collect()}
-    assert union_rows == {0, 1, 2}
-    # 4th segment: level 0 fills -> merge -> level 1 fills -> cascade to 2
-    tiers.add(seg(3, 4))
-    assert [lvl for lvl, dfs in sorted(tiers.tiers.items()) if dfs] == [2]
-    assert {r["id"] for r in tiers.union().collect()} == {0, 1, 2, 3}
-    # the cascade consumed and freed the old level-1 and level-0 segments
-    assert not persisted({l1_id, s2_id})
+    with scope() as owned:
+        tiers = _TieredSegments(fanout=2)
+        tiers.add(seg(0, 1))
+        tiers.add(seg(1, 2))  # level-0 full -> merge to level 1
+        assert [lvl for lvl, dfs in sorted(tiers.tiers.items()) if dfs] == [1]
+        l1 = tiers.tiers[1][0][0]  # entries are (df, durable_path) since r10
+        l1_id = rdd_id(l1)
+        s2 = seg(2, 3)
+        s2_id = rdd_id(s2)
+        tiers.add(s2)  # level 0 holds one segment; level 1 untouched
+        assert tiers.tiers[1][0][0] is l1, "level-1 segment rewritten by level-0 add"
+        assert persisted({l1_id, s2_id}) == {l1_id, s2_id}
+        union_rows = {r["id"] for r in tiers.union().collect()}
+        assert union_rows == {0, 1, 2}
+        # 4th segment: level 0 fills -> merge -> level 1 fills -> cascade to 2
+        tiers.add(seg(3, 4))
+        assert [lvl for lvl, dfs in sorted(tiers.tiers.items()) if dfs] == [2]
+        assert {r["id"] for r in tiers.union().collect()} == {0, 1, 2, 3}
+        # the cascade consumed and freed the old level-1 and level-0 segments
+        assert not persisted({l1_id, s2_id})
+        # the store owns exactly its live segment: merged-away ones left
+        # the scope when the merge freed them
+        (l2,) = [df for df, _ in tiers.tiers[2]]
+        assert [id(f) for f in owned] == [id(l2)]
+        l2_id = rdd_id(l2)
+    assert not persisted({l2_id})
 
 
 def test_tiered_segments_preserves_content_and_bounds_branches(spark):
