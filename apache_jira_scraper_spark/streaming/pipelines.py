@@ -378,8 +378,8 @@ def streaming_dedup_ingest(
             )
             # batch_id lives ONLY in the directory name: writing it as a data
             # column too made every read of out_dir resolve a duplicate
-            # (COLUMN_ALREADY_EXISTS warning; partition schema happened to win
-            # — review r06). Partition discovery reconstitutes the column.
+            # (COLUMN_ALREADY_EXISTS warning; partition schema happened to win).
+            # Partition discovery reconstitutes the column.
             # `kept` feeds ONLY this write (the index advance derives from the
             # batch shingle/signature checkpoints, not from kept), so no
             # re-checkpoint before it — one fewer job per batch (r09 profile).

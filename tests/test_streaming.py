@@ -752,7 +752,7 @@ def test_tiered_segments_compaction_touches_only_merged_tier(spark):
     that filled — higher-level segments are neither rewritten nor freed
     by a lower-level compaction — and a full cascade merges upward one
     level at a time. Freed segments are tracked by SPECIFIC RDD id
-    (asserting counts on the shared session flakes, review r08). The io
+    (asserting counts on the shared session flakes). The io
     scope the store was built in owns only its live segments."""
     from apache_jira_scraper_spark.io import scope
     from apache_jira_scraper_spark.streaming.pipelines import _TieredSegments
