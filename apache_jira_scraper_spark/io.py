@@ -273,12 +273,13 @@ def narrowed_shuffle_partitions(spark: SparkSession, n: int):
 _SESSION_CACHE_LOCK = threading.RLock()
 
 # Per-(cache, key) build locks (r13, VERDICT r12 item 4): the coarse
-# global lock serialized INDEPENDENT cold builds — q_two_stage_topk's
-# first sample paid ts-spine + pq + opq back-to-back (~15.5 s) even on
-# concurrent driver threads. The global lock now only guards dict
-# get/put and lock-map maintenance; each key's builder runs under its
-# own RLock, so distinct builds overlap while concurrent first calls for
-# the SAME key still build exactly once (the r09 leak contract).
+# global lock serialized INDEPENDENT cold builds — quantize's
+# q_two_stage_topk builds its ts-spine, PQ and OPQ caches on concurrent
+# driver threads, and paid them back-to-back (~15.5 s) behind one lock.
+# The global lock now only guards dict get/put and lock-map maintenance;
+# each key's builder runs under its own RLock, so distinct builds overlap
+# while concurrent first calls for the SAME key still build exactly once
+# (the r09 leak contract).
 _BUILD_LOCKS: dict = {}
 
 # Monotonic count of session_cached() calls (hits AND builds). bench.py
@@ -291,8 +292,10 @@ SESSION_CACHE_TOUCHES = 0
 def session_cached(cache: dict, spark: SparkSession, extra_key: tuple, build):
     """Session-scoped memoization for materialized (localCheckpoint'd)
     DataFrames, keyed (applicationId, *extra_key) — THE cache discipline
-    for the per-session silver tables (shingle index, pair table, simhash
-    sketch, issues table, embedding projections). Entries from OTHER
+    for shared silver tables. A session cache is kept only where two or
+    more registered gates read it; whatever a single gate reads is
+    per-call work, materialized at most once per call with `checkpoint`
+    and owned by the gate wrapper's scope (see `scope`). Entries from OTHER
     applicationIds are evicted on insert: they reference stopped
     SparkContexts whose checkpoint blocks are already gone, and would
     otherwise accumulate one dead DataFrame per session restart for the

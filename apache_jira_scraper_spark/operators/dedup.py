@@ -604,11 +604,6 @@ FROM marked ORDER BY doc_id
 """
 
 
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + LSH near-dup pairs, exact-verified (see minhash_pairs)."""
-    return minhash_pairs(spark, sf_dir).orderBy("d1", "d2")
-
-
 def q_dedup_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged near-dup gate (r05 rotation), three legs in one driver slot
     on the common (leg, a, b, v, h) shape:
@@ -620,23 +615,26 @@ def q_dedup_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
               certifies the reassembled TEXT, not just the counts
 
     lsh and ngram read the session-shared shingle index, so their merge
-    costs one extra leg over the same materialized blocks. The standalone
+    costs one extra leg over the same materialized blocks; ngram and
+    substr are per-call work, lazy inside the union. The standalone
     operators remain the library API."""
-    lsh = q_dedup_minhash_lsh(spark, sf_dir).select(
+    lsh = minhash_pairs(spark, sf_dir).select(
         F.lit("lsh").alias("leg"),
         F.col("d1").alias("a"),
         F.col("d2").alias("b"),
         F.col("jaccard").alias("v"),
         F.lit("").alias("h"),
     )
-    ng = _ngram_leg_cached(spark, sf_dir).select(
+    ng = q_dedup_ngram_jaccard(spark, sf_dir).select(
         F.lit("ngram").alias("leg"),
         F.col("d1").alias("a"),
         F.col("d2").alias("b"),
         F.col("jaccard").alias("v"),
         F.lit("").alias("h"),
     )
-    sub = _substr_leg_cached(spark, sf_dir).select(
+    sub = exact_substring_dedup(
+        load_table_parallel(spark, sf_dir, "documents"), ordered=False
+    ).select(
         F.lit("substr").alias("leg"),
         F.col("doc_id").alias("a"),
         F.col("n_removed").cast("bigint").alias("b"),
@@ -644,45 +642,6 @@ def q_dedup_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("cleaned_text").alias("h"),
     )
     return lsh.unionByName(ng).unionByName(sub).orderBy("leg", "a", "b")
-
-
-_NGRAM_LEG_CACHE: dict = {}
-
-
-def _ngram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached ngram leg of the near-dup gate (r13 optimization
-    round): the exact-jaccard inverted-index self-join over the shared
-    shingle table is a pure function of (session, sf_dir) yet re-ran its
-    full pair aggregation on every warm gate call (~1.3 s at sf0.1 by the
-    leg split) — the lsh leg's verified pairs (minhash_pairs) and the
-    substr leg already ride this exact discipline. Production analog: the
-    exact pair table is landed once between dedup stages. The checkpoint
-    is pair-count-sized (550 rows at sf0.1)."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return q_dedup_ngram_jaccard(spark, sf_dir).localCheckpoint(eager=True)
-
-    return session_cached(_NGRAM_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-_SUBSTR_LEG_CACHE: dict = {}
-
-
-def _substr_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached substr leg of the near-dup gate (r12): the
-    exact-substring pass explodes every 50-token window of the corpus and
-    reassembles cleaned text — per-call recompute of a per-session-constant
-    result, the same pattern the bigram/contam/semantic legs fixed. The
-    checkpoint is docs-sized (one row per doc)."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return exact_substring_dedup(
-            load_table_parallel(spark, sf_dir, "documents"), ordered=False
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_SUBSTR_LEG_CACHE, spark, (sf_dir,), _build)
 
 
 _BANDS_SQL = f"""
@@ -1472,66 +1431,6 @@ ORDER BY cluster_id, doc_id
 """
 
 
-_SEM_IVF_CACHE: dict = {}
-_SEM_LSH_CACHE: dict = {}
-_SEM_PROTO_CACHE: dict = {}
-
-
-def _sem_lsh_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached LSH leg of the semantic-dedup gate (r12): the leg
-    re-ran connected components over the cached pair table on EVERY gate
-    call (bench samples 3x) — ~1.5-3 s of iterative join/agg rounds per
-    call for a result that is a pure function of (session, sf_dir). Same
-    discipline as the ivf leg below."""
-    from ..io import session_cached
-    from .ivf import semantic_dedup
-
-    def _build() -> DataFrame:
-        proj = _emb_projection(spark, sf_dir, EMB_N_BITS)
-        return semantic_dedup(
-            proj.select("vec_id"), pairs=_emb_pairs_cached(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_SEM_LSH_CACHE, spark, (sf_dir,), _build)
-
-
-def _sem_ivf_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached IVF leg of the semantic-dedup gate: exact-discipline
-    training (ivf_build_exact — one bounded collect + driver numpy) +
-    nprobe-2 blocked pair generation + components, checkpointed once per
-    (session, sf_dir) (the _LABELS_CACHE pattern)."""
-    from ..io import session_cached
-    from .ivf import ivf_build_exact, ivf_near_dup_pairs_exact, semantic_dedup
-    from .similarity import _emb
-
-    def _build() -> DataFrame:
-        emb = _emb(spark, sf_dir)
-        cents = ivf_build_exact(emb)
-        return semantic_dedup(
-            emb.select("vec_id"), pairs=ivf_near_dup_pairs_exact(emb, cents)
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_SEM_IVF_CACHE, spark, (sf_dir,), _build)
-
-
-def _sem_proto_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached D4 prototype-prune leg: exact-discipline training
-    (bounded collect + driver numpy) + ivf.density_prune's histogram-
-    cutoff keep labels, checkpointed once per (session, sf_dir)."""
-    from ..io import session_cached
-    from .ivf import density_prune, ivf_build_exact
-    from .similarity import _emb
-
-    def _build() -> DataFrame:
-        emb = _emb(spark, sf_dir)
-        cents = ivf_build_exact(emb)
-        return density_prune(
-            emb.select("vec_id", "e"), cents, ordered=False
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_SEM_PROTO_CACHE, spark, (sf_dir,), _build)
-
-
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup driver gate, two union-tagged legs since r11 on
     (leg, vec_id, cluster_id, kept):
@@ -1552,8 +1451,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf0.1).
 
     Both legs end-to-end exact against DuckDB's recursive-CTE closures
-    over the identical pair SQL. r12: both legs ride session caches —
-    the lsh leg's component rounds were recomputed per call.
+    over the identical pair SQL. The lsh leg reads the session-shared
+    embedding pair table; its component rounds, and all of the ivf and
+    proto legs, are per-call work owned by the gate's io scope.
 
     r13 third leg, the step AFTER SemDeDup in the D4 recipe
     (Tirumala et al. 2023):
@@ -1565,13 +1465,26 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             the cell id; the hash covers every keep/drop bit against
             the ivq_proto CTE twin (ivf_exact_sql_ctes(proto_ppm=...)).
     """
-    lsh = _sem_lsh_leg_cached(spark, sf_dir).select(
-        F.lit("lsh").alias("leg"), "vec_id", "cluster_id", "kept"
+    from .ivf import (
+        density_prune,
+        ivf_build_exact,
+        ivf_near_dup_pairs_exact,
+        semantic_dedup,
     )
-    ivf = _sem_ivf_leg_cached(spark, sf_dir).select(
-        F.lit("ivf").alias("leg"), "vec_id", "cluster_id", "kept"
-    )
-    proto = _sem_proto_leg_cached(spark, sf_dir).select(
+    from .similarity import _emb
+
+    proj = _emb_projection(spark, sf_dir, EMB_N_BITS)
+    lsh = semantic_dedup(
+        proj.select("vec_id"), pairs=_emb_pairs_cached(spark, sf_dir)
+    ).select(F.lit("lsh").alias("leg"), "vec_id", "cluster_id", "kept")
+    # ONE exact-discipline training (bounded collect + driver numpy) per
+    # call feeds both the ivf blocking and the proto prune
+    emb = _emb(spark, sf_dir)
+    cents = ivf_build_exact(emb)
+    ivf = semantic_dedup(
+        emb.select("vec_id"), pairs=ivf_near_dup_pairs_exact(emb, cents)
+    ).select(F.lit("ivf").alias("leg"), "vec_id", "cluster_id", "kept")
+    proto = density_prune(emb.select("vec_id", "e"), cents, ordered=False).select(
         F.lit("proto").alias("leg"),
         "vec_id",
         F.col("cid").cast("bigint").alias("cluster_id"),

@@ -44,8 +44,8 @@ def tokens_col(col: Column | str = "text") -> Column:
 
 def _toks_of(docs: DataFrame) -> Column:
     """Pre-staged token array when the caller supplies one (`ts` column —
-    the shared tokenized checkpoint `_docs_tokenized_cached` feeds the
-    quality-gate legs), else split in place. One helper so every text
+    the text gate's per-call tokenized checkpoint feeds the quality-gate
+    legs), else split in place. One helper so every text
     operator can consume the shared subtree without changing its
     standalone (raw-docs) behavior.
 
@@ -843,7 +843,7 @@ def build_vocab(
 
     `pieces` (optional): a precomputed (..., pieces array<string>) frame —
     the pretokenized corpus — so callers holding a materialized piece
-    table (the gate's session checkpoint) skip the BPE_PATTERN regex pass
+    table (the gate's per-call checkpoint) skip the BPE_PATTERN regex pass
     (r13 optimization round, guide §2.3: the extraction ran once per
     consumer of the same corpus).
     """
@@ -1571,8 +1571,8 @@ def filter_verdict(
     same key — one shuffle lineage at scale) and a narrow CASE map. No
     new aggregate, no window, no collect.
 
-    Inputs are the signal frames (caller passes the session-cached gate
-    legs so nothing recomputes): contam = contamination_report rows,
+    Inputs are the signal frames (the gate passes its checkpointed contam
+    and ppl legs so nothing recomputes): contam = contamination_report rows,
     rep = repetition_signals rows, ppl = ppl_bucket rows, qc = qc_report
     rows. Inner joins intersect the coverages — with the gate's inputs
     that is the contam report's TRAIN split (eval-split docs are not
@@ -2076,125 +2076,15 @@ ORDER BY qid, rank
 """
 
 
-#: session cache for the gate's BM25 top-k table (50 rows, pure function
-#: of (session, sf_dir) — the similarity family's q_cosine_topk
-#: precedent): it feeds BOTH gate legs, and caching also bounds the
-#: inverted-index checkpoint inside bm25_topk to one per session.
-_BM25_TOPK_CACHE: dict = {}
-_BIGRAM_LEG_CACHE: dict = {}
-_DOCS_TOK_CACHE: dict = {}
-_CONTAM_LEG_CACHE: dict = {}
-
-
-def _docs_tokenized_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared tokenized-documents checkpoint (VERDICT r11 item 1): every
-    text_quality_signals leg previously re-scanned the parquet and
-    re-split `text` independently — 8 scans + 8 splits per gate call for
-    one row-identical subtree. Build (doc_id, n_chars, text, ts) ONCE per
-    (session, sf_dir), localCheckpoint it, and feed all legs: split-based
-    legs consume the staged `ts` array via _toks_of, the BPE legs
-    (vocab/encode) and the sentence split still need `text` but now read
-    it from cached blocks instead of the parquet scan. At cluster scale
-    the same pattern is a persisted silver table: tokenize once, run the
-    whole quality battery over the one materialization."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return (
-            load_table_parallel(spark, sf_dir, "documents")
-            .select("doc_id", "n_chars", "text", tokens_col().alias("ts"))
-            .localCheckpoint(eager=True)
-        )
-
-    return session_cached(_DOCS_TOK_CACHE, spark, (sf_dir,), _build)
-
-
-def _bpe_pieces_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared BPE-pretokenized corpus checkpoint (r13 optimization round):
-    (doc_id, pieces array<string>) under BPE_PATTERN. The vocab leg, the
-    encode leg's vocabulary rebuild and the encode leg's position table
-    each re-ran the same regexp_extract_all over every document per gate
-    call — three extraction passes of one row-identical table (guide
-    §2.3/§2.4). Materialize it once per (session, sf_dir) next to the
-    whitespace-token checkpoint; at cluster scale this is the landed
-    pretokenized silver table the tokenizer-induction stages fan out
-    from."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return (
-            _docs_tokenized_cached(spark, sf_dir)
-            .select(
-                "doc_id",
-                F.regexp_extract_all(
-                    "text", F.lit(BPE_PATTERN), F.lit(0)
-                ).alias("pieces"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    return session_cached(_BPE_PIECES_CACHE, spark, (sf_dir,), _build)
-
-
-def _unigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached unigram-LM leg (r13 optimization round): the
-    Laplace-smoothed unigram scores are a pure function of (session,
-    sf_dir) — the same corpus-trained-LM class as the cached bigram and
-    backoff legs (r10/r12) — yet the token-count shuffle join re-ran on
-    every warm gate call (~0.6 s at sf0.1 by the leg split). The
-    checkpoint is docs-sized (one row per doc)."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return unigram_logprob(
-            _docs_tokenized_cached(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_UNIGRAM_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-def _contam_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached decontamination leg (ADVICE r11): the contam leg is
-    the gate's widest subtree (double 8-gram explode + distinct + gram-
-    keyed semi-join) and was rebuilt on every gate call (bench samples
-    3x) — exactly the per-call recompute the bigram leg's cache fixed in
-    r10. The result is train-docs-sized (one row per train doc), so the
-    checkpoint is small; the build consumes the shared tokenized frame."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        docs = _docs_tokenized_cached(spark, sf_dir)
-        return contamination_report(
-            docs.filter(F.col("doc_id") % DECONTAM_EVAL_MOD != 0),
-            docs.filter(F.col("doc_id") % DECONTAM_EVAL_MOD == 0),
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_CONTAM_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-_BACKOFF_LEG_CACHE: dict = {}
-_BPE_PIECES_CACHE: dict = {}
-_UNIGRAM_LEG_CACHE: dict = {}
-_QC_WEIGHTS_CACHE: dict = {}
-_BPE_LEG_CACHE: dict = {}
-_DSIR_LEG_CACHE: dict = {}
-_TOKPACK_LEG_CACHE: dict = {}
-_PPL_LEG_CACHE: dict = {}
-_VERDICT_LEG_CACHE: dict = {}
-_UNITOK_LEG_CACHE: dict = {}
-
-
-def _unitok_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached unigram-tokenizer gate leg (r13): train the
-    SentencePiece-style unigram LM at the gate budgets (one hard-EM
-    round, max piece 3, vocab 40) over the shared tokenized checkpoint,
+def _unitok_leg(docs: DataFrame) -> DataFrame:
+    """Unigram-tokenizer gate leg: train the SentencePiece-style unigram
+    LM at the gate budgets (one hard-EM round, max piece 3, vocab 40),
     then Viterbi-segment the corpus via the word-keyed join path with
     the per-doc integer score. Emits harmonized rows for BOTH sub-legs:
     ('ut_vocab', vid, piece, cnt, lp_e4) — the whole trained model under
     the hash — and ('ut_seg', doc_id, md5 of the pieces, n_pieces,
     score). Oracle: unigram.unigram_gate_sql's rolling-window recursive-
     CTE Viterbi (``ug_`` prefix reserved)."""
-    from ..io import session_cached
     from .unigram import (
         UNI_GATE_MAXP,
         UNI_GATE_ROUNDS,
@@ -2203,127 +2093,50 @@ def _unitok_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_train,
     )
 
-    def _build() -> DataFrame:
-        docs = _docs_tokenized_cached(spark, sf_dir)
-        v = unigram_train(
-            docs,
-            vocab_size=UNI_GATE_VOCAB,
-            n_rounds=UNI_GATE_ROUNDS,
-            max_piece=UNI_GATE_MAXP,
-        )
-        seg = unigram_segment(
-            docs,
-            v,
-            max_piece=UNI_GATE_MAXP,
-            ordered=False,
-            with_score=True,
-        )
-        zero = F.lit(0).cast("bigint")
-        vocab_rows = v.select(
-            F.lit("ut_vocab").alias("leg"),
-            F.col("id").cast("bigint").alias("id"),
-            F.col("piece").alias("txt"),
-            F.col("cnt").cast("bigint").alias("m1"),
-            F.col("lp_e4").cast("bigint").alias("m2"),
-            zero.alias("m3"),
-        )
-        seg_rows = seg.select(
-            F.lit("ut_seg").alias("leg"),
-            F.col("doc_id").cast("bigint").alias("id"),
-            F.md5(F.concat_ws(" ", "pieces")).alias("txt"),
-            F.col("n_pieces").cast("bigint").alias("m1"),
-            F.col("score").cast("bigint").alias("m2"),
-            zero.alias("m3"),
-        )
-        return vocab_rows.unionByName(seg_rows).localCheckpoint(eager=True)
-
-    return session_cached(_UNITOK_LEG_CACHE, spark, (sf_dir,), _build)
+    v = unigram_train(
+        docs,
+        vocab_size=UNI_GATE_VOCAB,
+        n_rounds=UNI_GATE_ROUNDS,
+        max_piece=UNI_GATE_MAXP,
+    )
+    seg = unigram_segment(
+        docs,
+        v,
+        max_piece=UNI_GATE_MAXP,
+        ordered=False,
+        with_score=True,
+    )
+    zero = F.lit(0).cast("bigint")
+    vocab_rows = v.select(
+        F.lit("ut_vocab").alias("leg"),
+        F.col("id").cast("bigint").alias("id"),
+        F.col("piece").alias("txt"),
+        F.col("cnt").cast("bigint").alias("m1"),
+        F.col("lp_e4").cast("bigint").alias("m2"),
+        zero.alias("m3"),
+    )
+    seg_rows = seg.select(
+        F.lit("ut_seg").alias("leg"),
+        F.col("doc_id").cast("bigint").alias("id"),
+        F.md5(F.concat_ws(" ", "pieces")).alias("txt"),
+        F.col("n_pieces").cast("bigint").alias("m1"),
+        F.col("score").cast("bigint").alias("m2"),
+        zero.alias("m3"),
+    )
+    return vocab_rows.unionByName(seg_rows)
 
 
-def _verdict_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached mixer-verdict leg (r13): composes three cached
-    signal frames plus two narrow maps; caching the docs-sized result
-    follows the sibling discipline (measured ~0.3 s/warm-call otherwise
-    — the four-join subtree re-plans every gate call)."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        from .classifier import qc_report
-
-        docs = _docs_tokenized_cached(spark, sf_dir)
-        return filter_verdict(
-            docs,
-            _contam_leg_cached(spark, sf_dir),
-            repetition_signals(docs),
-            _ppl_leg_cached(spark, sf_dir),
-            qc_report(docs, _qc_weights_cached(spark, sf_dir), ordered=False),
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_VERDICT_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-def _ppl_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached CCNet perplexity-bucketing leg (r13): derives
-    purely from the cached backoff scores, but participating UNCACHED in
-    the 15-leg union added ~1 s of per-call plan/exchange overhead at
-    sf0.1 (measured; the standalone leg runs 0.3 s warm) — so the
-    corpus-sized label frame checkpoints once per (session, sf_dir) like
-    its siblings."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return ppl_bucket(
-            _backoff_leg_cached(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_PPL_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-def _tokpack_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached tokenize-and-pack leg (r13): encode the corpus
-    under the induced vocabulary (the certified 'encode' machinery,
-    unordered) and materialize the fixed-length training sequences via
-    pack_token_ids — the artifact a pretraining pipeline actually lands.
-    Sequence-count-sized result (total_tokens / PACK_CONTEXT rows), so
-    the checkpoint is small."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        docs = _docs_tokenized_cached(spark, sf_dir)
-        enc = encode_with_vocab(docs, build_vocab(docs), ordered=False)
-        return pack_token_ids(enc).localCheckpoint(eager=True)
-
-    return session_cached(_TOKPACK_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-def _dsir_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached DSIR importance-resampling leg (r13): feature
-    explode + two bucket-keyed aggs + bucket join + doc re-agg per build
-    — per-session-constant, so it rides the bigram/contam discipline
-    over the shared tokenized checkpoint."""
-    from ..io import session_cached
-    from .dsir import dsir_logratio
-
-    def _build() -> DataFrame:
-        return dsir_logratio(
-            _docs_tokenized_cached(spark, sf_dir), ordered=False
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_DSIR_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached BPE gate leg (r13): train BPE_GATE_MERGES merges
-    over the shared tokenized corpus (8 vocabulary-sized shuffles + 8
-    one-row collects), then segment the corpus via the SCALE PATH — the
-    word-keyed join of corpus words against the trained (word, symbols)
-    table (bpe_segment(encoded_words=...)), so the certified plan is the
-    one a 30k-merge production run would use, not the rank-by-rank fold.
-    Emits harmonized rows for BOTH sub-legs: ('bpe_merge', rank, 'l r')
-    for the learned rule sequence and ('bpe_seg', doc_id, md5 of the
-    pieces) for the segmentation. The trained word table's checkpoint is
-    freed with the build scope once the leg materializes."""
-    from ..io import session_cached
+def _bpe_leg(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """BPE gate leg: train BPE_GATE_MERGES merges over the tokenized
+    corpus (8 vocabulary-sized shuffles + 8 one-row collects), then
+    segment the corpus via the SCALE PATH — the word-keyed join of corpus
+    words against the trained (word, symbols) table
+    (bpe_segment(encoded_words=...)), so the certified plan is the one a
+    30k-merge production run would use, not the rank-by-rank fold. Emits
+    harmonized rows for BOTH sub-legs: ('bpe_merge', rank, 'l r') for the
+    learned rule sequence and ('bpe_seg', doc_id, md5 of the pieces) for
+    the segmentation. The trained word table and the segmentation are
+    io.checkpoints owned by the caller's scope."""
     from .bpe import (
         BPE_GATE_MERGES,
         bpe_encode,
@@ -2332,116 +2145,55 @@ def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_vocab,
     )
 
-    def _build() -> DataFrame:
-        docs = _docs_tokenized_cached(spark, sf_dir)
-        counts: list = []
-        merges, words = bpe_train(
-            docs, n_merges=BPE_GATE_MERGES, counts_out=counts
+    counts: list = []
+    merges, words = bpe_train(docs, n_merges=BPE_GATE_MERGES, counts_out=counts)
+    if len(merges) != BPE_GATE_MERGES:
+        raise ValueError(
+            f"bpe gate: corpus ran out of pairs after {len(merges)} "
+            f"merges (budget {BPE_GATE_MERGES}) - degenerate fixture?"
         )
-        if len(merges) != BPE_GATE_MERGES:
-            raise ValueError(
-                f"bpe gate: corpus ran out of pairs after {len(merges)} "
-                f"merges (budget {BPE_GATE_MERGES}) - degenerate fixture?"
-            )
-        zero = F.lit(0).cast("bigint")
-        merge_rows = spark.createDataFrame(
-            [
-                (i + 1, f"{l} {r}", c)
-                for i, ((l, r), c) in enumerate(zip(merges, counts))
-            ],
-            "id bigint, txt string, m1 bigint",
-        ).select(F.lit("bpe_merge").alias("leg"), "id", "txt", "m1",
-                 zero.alias("m2"), zero.alias("m3"))
-        # ONE segmentation feeds both the seg and ids legs (review r13:
-        # the union has no cross-branch subtree reuse, so an uncheck-
-        # pointed shared frame would still evaluate twice) — eager
-        # checkpoint, owned by the build scope like the word table
-        seg = checkpoint(bpe_segment(docs, merges, encoded_words=words, ordered=False))
-        seg_rows = seg.select(
-            F.lit("bpe_seg").alias("leg"),
-            F.col("doc_id").alias("id"),
-            F.md5(F.concat_ws(" ", "pieces")).alias("txt"),
-            F.col("n_pieces").cast("bigint").alias("m1"),
-            zero.alias("m2"),
-            zero.alias("m3"),
-        )
-        # r13 late: 'bpe_ids' certifies bpe_vocab + bpe_encode — the
-        # GPT-2 id layout (alphabet lexicographic, merges in training
-        # order) and the broadcast-vocab encode, md5 per id stream.
-        enc = bpe_encode(
-            docs,
-            merges,
-            bpe_vocab(merges, words),
-            segmented=seg,
-            ordered=False,
-        )
-        ids_rows = enc.select(
-            F.lit("bpe_ids").alias("leg"),
-            F.col("doc_id").alias("id"),
-            F.md5(
-                F.concat_ws(",", F.transform("ids", lambda x: x.cast("string")))
-            ).alias("txt"),
-            F.col("n_pieces").cast("bigint").alias("m1"),
-            zero.alias("m2"),
-            zero.alias("m3"),
-        )
-        return (
-            merge_rows.unionByName(seg_rows)
-            .unionByName(ids_rows)
-            .localCheckpoint(eager=True)
-        )
-
-    return session_cached(_BPE_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-def _qc_weights_cached(spark: SparkSession, sf_dir: str) -> list:
-    """Session-cached trained classifier weights (r13, 'qc' gate leg):
-    training is one 256-row collect + driver GD — constant per
-    (session, sf_dir), and caching keeps the gate's repeat samples to the
-    zero-shuffle scoring map alone. The cached value is the ROUNDED
-    weight list (qc_gate_weights — the cross-engine contract), not a
-    DataFrame: session_cached stores it fine, there is just no
-    checkpoint to free on eviction."""
-    from ..io import session_cached
-    from .classifier import qc_gate_weights
-
-    return session_cached(
-        _QC_WEIGHTS_CACHE,
-        spark,
-        (sf_dir,),
-        lambda: qc_gate_weights(_docs_tokenized_cached(spark, sf_dir)),
+    zero = F.lit(0).cast("bigint")
+    merge_rows = spark.createDataFrame(
+        [
+            (i + 1, f"{l} {r}", c)
+            for i, ((l, r), c) in enumerate(zip(merges, counts))
+        ],
+        "id bigint, txt string, m1 bigint",
+    ).select(F.lit("bpe_merge").alias("leg"), "id", "txt", "m1",
+             zero.alias("m2"), zero.alias("m3"))
+    # ONE segmentation feeds both the seg and ids legs (review r13: the
+    # union has no cross-branch subtree reuse, so an uncheckpointed
+    # shared frame would still evaluate twice)
+    seg = checkpoint(bpe_segment(docs, merges, encoded_words=words, ordered=False))
+    seg_rows = seg.select(
+        F.lit("bpe_seg").alias("leg"),
+        F.col("doc_id").alias("id"),
+        F.md5(F.concat_ws(" ", "pieces")).alias("txt"),
+        F.col("n_pieces").cast("bigint").alias("m1"),
+        zero.alias("m2"),
+        zero.alias("m3"),
     )
-
-
-def _backoff_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached stupid-backoff leg (r12, 9th gate leg): five
-    key-partitioned joins over the exploded trigram stream per build —
-    per-session-constant, so it rides the bigram/contam discipline and
-    consumes the shared tokenized checkpoint."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return trigram_backoff_logprob(
-            _docs_tokenized_cached(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_BACKOFF_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-def _bigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached bigram-LM leg of the quality gate (ADVICE r10): the
-    exploded pair subtree persists for the single build, the docs-sized
-    result checkpoints once per (session, sf_dir), and the persisted
-    scratch frees with the build scope — without this, every gate call
-    (bench samples 3x) leaked either a recompute of the widest per-doc
-    explode or an unfreeable per-call checkpoint."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        docs = _docs_tokenized_cached(spark, sf_dir)
-        return bigram_logprob(docs).localCheckpoint(eager=True)
-
-    return session_cached(_BIGRAM_LEG_CACHE, spark, (sf_dir,), _build)
+    # r13 late: 'bpe_ids' certifies bpe_vocab + bpe_encode — the GPT-2 id
+    # layout (alphabet lexicographic, merges in training order) and the
+    # broadcast-vocab encode, md5 per id stream.
+    enc = bpe_encode(
+        docs,
+        merges,
+        bpe_vocab(merges, words),
+        segmented=seg,
+        ordered=False,
+    )
+    ids_rows = enc.select(
+        F.lit("bpe_ids").alias("leg"),
+        F.col("doc_id").alias("id"),
+        F.md5(
+            F.concat_ws(",", F.transform("ids", lambda x: x.cast("string")))
+        ).alias("txt"),
+        F.col("n_pieces").cast("bigint").alias("m1"),
+        zero.alias("m2"),
+        zero.alias("m3"),
+    )
+    return merge_rows.unionByName(seg_rows).unionByName(ids_rows)
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2456,21 +2208,15 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collection; the fused order genuinely differs from the lexical
     branch (42-46/50 slots across sf0.001-0.1, pinned at >= 60% in
     tests so a degenerate agreement fails loudly). The semantic branch
-    re-reads the
-    session-cached exact top-k the similarity gates already
+    re-reads the session-cached exact top-k the similarity gates already
     materialize; the DuckDB oracle restates the fusion over the same
     two branch queries (validated against an independent Python RRF
     before wiring)."""
-    from ..io import session_cached
     from .similarity import hybrid_rrf_topk, q_cosine_topk
 
-    def _build() -> DataFrame:
-        # the per-(doc,term) inverted-index checkpoint, orders of magnitude
-        # larger than the 50-row result it builds, frees with the build scope
-        docs = load_table_parallel(spark, sf_dir, "documents")
-        return bm25_topk(docs).localCheckpoint(eager=True)
-
-    bm = session_cached(_BM25_TOPK_CACHE, spark, (sf_dir,), _build)
+    # both legs read the 50-row list: one checkpoint per call, owned by
+    # the gate's scope like the inverted index bm25_topk builds it from
+    bm = checkpoint(bm25_topk(load_table_parallel(spark, sf_dir, "documents")))
     fused = hybrid_rrf_topk(bm, q_cosine_topk(spark, sf_dir))
     return (
         bm.select(
@@ -2529,69 +2275,7 @@ ORDER BY leg, qid, rank
 """
 
 
-_TEXT_GATE_FRAME_MEMO: dict = {}
-
-
-def drain_session_caches() -> None:
-    """Free + clear EVERY session cache this module owns, including the
-    gate's prepared-query frame memo (ADVICE r13: the memo holds a lazy
-    frame referencing the leg checkpoints — any drain site that clears a
-    leg cache but leaves the memo hands the next caller dangling
-    checkpoint scans; centralizing the enumeration HERE makes that
-    invariant structural instead of a convention each drain site must
-    remember). Callers: tools/scale_probe.py's cold-sample reset, tests.
-    Values are checkpointed DataFrames, tuples containing them, or plain
-    model objects (cleared; nothing to free)."""
-    from ..io import free_local_checkpoint
-
-    for cache in (
-        _BM25_TOPK_CACHE,
-        _BIGRAM_LEG_CACHE,
-        _DOCS_TOK_CACHE,
-        _CONTAM_LEG_CACHE,
-        _BACKOFF_LEG_CACHE,
-        _QC_WEIGHTS_CACHE,
-        _BPE_LEG_CACHE,
-        _DSIR_LEG_CACHE,
-        _TOKPACK_LEG_CACHE,
-        _PPL_LEG_CACHE,
-        _VERDICT_LEG_CACHE,
-        _UNIGRAM_LEG_CACHE,
-        _UNITOK_LEG_CACHE,
-        _BPE_PIECES_CACHE,
-        _TEXT_GATE_FRAME_MEMO,
-    ):
-        for v in list(cache.values()):
-            for x in v if isinstance(v, tuple) else (v,):
-                if hasattr(x, "unpersist"):
-                    free_local_checkpoint(x)
-        cache.clear()
-
-
 def q_text_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Union-tagged driver gate — thin prepared-query wrapper (r13
-    optimization round, guide §7.3: planning time itself can become the
-    bottleneck). The assembled 19-leg union frame is memoized per
-    (session, sf_dir): `_build_text_gate_frame`'s ~300-expression tree
-    cost ~1.3 s of per-call Python construction + Catalyst analysis,
-    although it is a pure function of (session, sf_dir). The memo holds
-    the lazily-assembled DataFrame OBJECT only — no result data beyond
-    the legs' inventoried session checkpoints is materialized, and
-    optimization, physical planning and execution still run on every
-    call (the noop sink re-executes the full plan). The presentation
-    sort stays live per call on top."""
-    from ..io import session_cached
-
-    frame = session_cached(
-        _TEXT_GATE_FRAME_MEMO,
-        spark,
-        (sf_dir,),
-        lambda: _build_text_gate_frame(spark, sf_dir),
-    )
-    return frame.orderBy("leg", "id", "txt")
-
-
-def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-tagged driver gate (r05 rotation) for the corpus-quality ops
     previously pytest-only: Gopher repetition signals, the quality
     threshold sweep, and the induced tokenizer vocabulary, harmonized to
@@ -2640,8 +2324,8 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                   bpe_encode's broadcast-vocab join under the hash)
       ppl_bucket  id=doc_id, txt=head|middle|tail|skip, m1=1e-2-nat
                   grid score, m2/m3=the corpus tercile cutoffs (r13 —
-                  CCNet perplexity bucketing over the cached backoff
-                  scores; the hash certifies labels AND cutoffs)
+                  CCNet perplexity bucketing over the backoff scores;
+                  the hash certifies labels AND cutoffs)
       ut_vocab    id=piece_id, txt=piece, m1=cnt, m2=lp_e4 (r13 — the
                   unigram-LM tokenizer's ENTIRE trained model after one
                   hard-EM round; oracle re-trains in SQL with a
@@ -2673,52 +2357,69 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram's bigram-keyed shuffle join over the zero-shuffle zip_with
     pair construction.
 
-    r12: all legs consume ONE shared tokenized checkpoint
-    (_docs_tokenized_cached) instead of independent scan+split subtrees;
-    the contam leg — the widest explode — is session-cached like the
-    bigram leg (ADVICE r11); and the 9th 'backoff' leg certifies the
-    held-out stupid-backoff trigram LM (session-cached build).
+    Everything is per-call work. What a call reads more than once is
+    materialized once, as an io.checkpoint owned by the gate's scope:
+    the tokenized corpus (doc_id, n_chars, text, ts), which every leg
+    reads; the BPE-pretokenized pieces, read by the vocab and encode
+    legs; and the three legs read twice — contam (its leg and verdict),
+    backoff (its leg and ppl) and ppl (its leg and verdict). Every other
+    leg stays lazy inside the one union.
     """
-    docs = _docs_tokenized_cached(spark, sf_dir)
-    # r13: the five cached leg builds (bigram, contam, backoff, qc
-    # weights, bpe) are independent once the shared tokenized checkpoint
-    # above exists — under io.session_cached's per-key build locks they
-    # run on concurrent driver threads (the q_two_stage_topk pattern), so
-    # a cold gate pays the slowest build, not the sum (measured 22.8 ->
-    # 15.8 s cold at sf0.1 — the floor is the BPE leg's 8 inherently
-    # sequential training rounds). Warm calls are five dict hits.
     from concurrent.futures import ThreadPoolExecutor
+    from contextvars import copy_context
 
-    with ThreadPoolExecutor(max_workers=9) as _ex:
-        _f_bg = _ex.submit(_bigram_leg_cached, spark, sf_dir)
-        _f_ct = _ex.submit(_contam_leg_cached, spark, sf_dir)
-        _f_bk = _ex.submit(_backoff_leg_cached, spark, sf_dir)
-        _f_qc = _ex.submit(_qc_weights_cached, spark, sf_dir)
-        _f_bpe = _ex.submit(_bpe_leg_cached, spark, sf_dir)
-        _f_ds = _ex.submit(_dsir_leg_cached, spark, sf_dir)
-        _f_tp = _ex.submit(_tokpack_leg_cached, spark, sf_dir)
-        # ppl chains on backoff via session_cached's per-key lock: its
-        # thread blocks on the backoff build, then layers the bounded
-        # histogram pass — still off this thread's critical path
-        _f_ppl = _ex.submit(_ppl_leg_cached, spark, sf_dir)
-        # verdict chains on contam/ppl/qc-weights via their build locks
-        _f_vd = _ex.submit(_verdict_leg_cached, spark, sf_dir)
-        # r13: the unigram-tokenizer leg (one EM round = 2 bounded
-        # collects) rides its own thread like the BPE leg
-        _f_ut = _ex.submit(_unitok_leg_cached, spark, sf_dir)
-        # r13 optimization round: the pretokenized-pieces checkpoint (read
-        # by the vocab + encode legs below) and the unigram-LM leg join
-        # the same concurrent build pool
-        _f_pieces = _ex.submit(_bpe_pieces_cached, spark, sf_dir)
-        _f_uni = _ex.submit(_unigram_leg_cached, spark, sf_dir)
-        _bg_df, _ct_df, _bk_df = _f_bg.result(), _f_ct.result(), _f_bk.result()
-        _qc_w, _bpe_df, _ds_df = _f_qc.result(), _f_bpe.result(), _f_ds.result()
-        _tp_df, _ppl_df, _vd_df = _f_tp.result(), _f_ppl.result(), _f_vd.result()
-        _ut_df = _f_ut.result()
-        _pieces_df, _uni_df = _f_pieces.result(), _f_uni.result()
+    from .classifier import qc_gate_weights, qc_report
+    from .dsir import dsir_logratio
+
+    docs = checkpoint(
+        load_table_parallel(spark, sf_dir, "documents").select(
+            "doc_id", "n_chars", "text", tokens_col().alias("ts")
+        )
+    )
+
+    def contam() -> DataFrame:
+        # train docs against the deterministic mod-7 eval split
+        return checkpoint(
+            contamination_report(
+                docs.filter(F.col("doc_id") % DECONTAM_EVAL_MOD != 0),
+                docs.filter(F.col("doc_id") % DECONTAM_EVAL_MOD == 0),
+            )
+        )
+
+    def backoff_and_ppl() -> tuple[DataFrame, DataFrame]:
+        backoff = checkpoint(trigram_backoff_logprob(docs))
+        return backoff, checkpoint(ppl_bucket(backoff))
+
+    # The eager jobs are independent once `docs` exists, so they run on
+    # concurrent driver threads: a call pays the slowest (the BPE leg's
+    # sequential training rounds), not the sum. Each task runs in a copy
+    # of this context, so its checkpoints land in the gate's scope.
+    with ThreadPoolExecutor(max_workers=6) as ex:
+
+        def run(fn, *args):
+            return ex.submit(copy_context().run, fn, *args)
+
+        f_pieces = run(
+            checkpoint,
+            docs.select(
+                "doc_id",
+                F.regexp_extract_all("text", F.lit(BPE_PATTERN), F.lit(0)).alias(
+                    "pieces"
+                ),
+            ),
+        )
+        f_contam = run(contam)
+        f_backoff = run(backoff_and_ppl)
+        f_qc = run(qc_gate_weights, docs)
+        f_bpe = run(_bpe_leg, spark, docs)
+        f_unitok = run(_unitok_leg, docs)
+        pieces, contam_df, qc_w = f_pieces.result(), f_contam.result(), f_qc.result()
+        backoff_df, ppl_df = f_backoff.result()
+        bpe, unitok = f_bpe.result(), f_unitok.result()
     zero = F.lit(0).cast("bigint")
     empty = F.lit("").alias("txt")
-    rep = repetition_signals(docs).select(
+    rep_df = repetition_signals(docs)
+    rep = rep_df.select(
         F.lit("repetition").alias("leg"),
         F.col("doc_id").alias("id"),
         empty,
@@ -2727,8 +2428,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("top_bigram_ppm").cast("bigint").alias("m3"),
     )
     # 17th leg (r13): the canonical Gopher document-rule filter — a
-    # zero-shuffle narrow map like the repetition leg (no session cache:
-    # nothing to amortize).
+    # zero-shuffle narrow map like the repetition leg.
     gopher = gopher_rules(docs, ordered=False).select(
         F.lit("gopher").alias("leg"),
         F.col("doc_id").alias("id"),
@@ -2745,7 +2445,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_tokens_kept").cast("bigint").alias("m2"),
         F.col("token_share_ppm").cast("bigint").alias("m3"),
     )
-    vocab_df = build_vocab(docs, pieces=_pieces_df)
+    vocab_df = build_vocab(docs, pieces=pieces)
     vocab = vocab_df.select(
         F.lit("vocab").alias("leg"),
         F.col("rank").cast("bigint").alias("id"),
@@ -2756,7 +2456,8 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ordered=False: the union's own orderBy re-sorts (review r13 — the
     # flag's raison d'être names the gate legs as the callers)
-    enc = encode_with_vocab(docs, vocab_df, ordered=False, pieces=_pieces_df).select(
+    enc_df = encode_with_vocab(docs, vocab_df, ordered=False, pieces=pieces)
+    enc = enc_df.select(
         F.lit("encode").alias("leg"),
         F.col("doc_id").alias("id"),
         F.md5(
@@ -2766,7 +2467,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         zero.alias("m2"),
         zero.alias("m3"),
     )
-    uni = _uni_df.select(
+    uni = unigram_logprob(docs).select(
         F.lit("unigram").alias("leg"),
         F.col("doc_id").alias("id"),
         empty,
@@ -2774,7 +2475,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sum_logprob_en4").cast("bigint").alias("m2"),
         F.col("avg_logprob_en4").cast("bigint").alias("m3"),
     )
-    bg = _bg_df.select(
+    bg = bigram_logprob(docs).select(
         F.lit("bigram").alias("leg"),
         F.col("doc_id").alias("id"),
         empty,
@@ -2785,7 +2486,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 7th leg (r11): benchmark decontamination over the deterministic
     # mod-7 eval split — per train doc: distinct 8-grams, eval-overlapping
     # 8-grams, contamination ppm (the contaminated flag is m2 > 0).
-    contam = _ct_df.select(
+    contam = contam_df.select(
         F.lit("contam").alias("leg"),
         F.col("doc_id").alias("id"),
         empty,
@@ -2804,7 +2505,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pack_last").alias("m3"),
     )
     # 9th leg (r12): held-out stupid-backoff trigram LM.
-    backoff = _bk_df.select(
+    backoff = backoff_df.select(
         F.lit("backoff").alias("leg"),
         F.col("doc_id").alias("id"),
         empty,
@@ -2812,9 +2513,9 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sum_logprob_en4").alias("m2"),
         F.col("avg_logprob_en4").alias("m3"),
     )
-    # 15th leg (r13): CCNet perplexity bucketing — rides the same cached
-    # backoff scores; cutoffs from the bounded grid histogram.
-    ppl = _ppl_df.select(
+    # 15th leg (r13): CCNet perplexity bucketing over the backoff scores;
+    # cutoffs from the bounded grid histogram.
+    ppl = ppl_df.select(
         F.lit("ppl_bucket").alias("leg"),
         F.col("doc_id").alias("id"),
         F.col("bucket").alias("txt"),
@@ -2823,12 +2524,11 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cut_hi").alias("m3"),
     )
     # 10th leg (r13): the weak-label-distillation quality classifier —
-    # GD-trained weights (session-cached, rounded per the cross-engine
-    # contract) scoring the whole corpus in one zero-shuffle narrow map;
-    # the oracle re-trains the same GD in chained SQL CTEs.
-    from .classifier import qc_report
-
-    qc = qc_report(docs, _qc_w, ordered=False).select(
+    # GD-trained weights (rounded per the cross-engine contract) scoring
+    # the whole corpus in one zero-shuffle narrow map; the oracle
+    # re-trains the same GD in chained SQL CTEs.
+    qc_df = qc_report(docs, qc_w, ordered=False)
+    qc = qc_df.select(
         F.lit("qc").alias("leg"),
         F.col("doc_id").alias("id"),
         empty,
@@ -2836,12 +2536,10 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pred").cast("bigint").alias("m2"),
         F.col("agree").cast("bigint").alias("m3"),
     )
-    # 11th/12th legs (r13): BPE merge training + join-path segmentation
-    # (session-cached; both sub-legs ride one frame).
-    bpe = _bpe_df
-    # 14th leg (r13): tokenize-and-pack — the materialized fixed-length
-    # training sequences (md5 over each window's id stream).
-    tokpack = _tp_df.select(
+    # 14th leg (r13): tokenize-and-pack — the fixed-length training
+    # sequences packed from the encode leg's id streams (md5 over each
+    # window's ids).
+    tokpack = pack_token_ids(enc_df).select(
         F.lit("tokpack").alias("leg"),
         F.col("seq_id").alias("id"),
         F.md5(
@@ -2854,7 +2552,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16th leg (r13): the mixer decision — composes four certified
     # signal frames (contam/repetition/ppl/qc) into one keep/drop
     # verdict with first-failing-rule reason codes.
-    verdict = _vd_df.select(
+    verdict = filter_verdict(docs, contam_df, rep_df, ppl_df, qc_df).select(
         F.lit("verdict").alias("leg"),
         F.col("doc_id").alias("id"),
         F.col("reason").alias("txt"),
@@ -2864,7 +2562,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 13th leg (r13): DSIR importance resampling — hashed-n-gram
     # target-vs-background log importance ratio per doc.
-    dsir = _ds_df.select(
+    dsir = dsir_logratio(docs, ordered=False).select(
         F.lit("dsir").alias("leg"),
         F.col("doc_id").alias("id"),
         empty,
@@ -2872,10 +2570,9 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("logratio_en4").cast("bigint").alias("m2"),
         F.col("sampled").cast("bigint").alias("m3"),
     )
-    # 18th/19th legs (r13): the unigram-LM tokenizer — the trained model
-    # (ut_vocab) and the scored Viterbi segmentation (ut_seg), already
-    # harmonized rows from the cached builder.
-    unitok = _ut_df
+    # 11th/12th legs (bpe: merges, segmentation, ids) and 18th/19th
+    # (unitok: the trained unigram-LM model and its Viterbi segmentation)
+    # arrive as harmonized rows from their builders.
     return (
         rep.unionByName(gopher)
         .unionByName(sweep)
@@ -2893,6 +2590,7 @@ def _build_text_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(dsir)
         .unionByName(tokpack)
         .unionByName(unitok)
+        .orderBy("leg", "id", "txt")
     )
 
 

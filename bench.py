@@ -90,13 +90,12 @@ def main() -> None:
     # exceeds the cutoff is not re-sampled, bounding total bench wall.
     n_samples = int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES", "3"))
     # 45 s: above the heaviest cold first runs (stream_stateful ~12-20 s;
-    # text_quality_signals ~19-24 s on the build host after its r12 cache
-    # family — four session caches build serially in sample 1, and a
-    # slower driver host could push that past the old 30 s cutoff, which
-    # would record the COLD build as the gate's min instead of resampling
-    # to warm) but low enough that a pathological gate can't eat minutes
-    # of bench wall. r13 optimization round: raised 45 -> 90 after a
-    # measured host-degradation phase pushed stream_stateful's cold sample
+    # text_quality_signals ~19-24 s on the build host — a slower driver
+    # host could push that past the old 30 s cutoff, which would record
+    # the COLD build as the gate's min instead of resampling to warm) but
+    # low enough that a pathological gate can't eat minutes of bench wall.
+    # r13 optimization round: raised 45 -> 90 after a measured
+    # host-degradation phase pushed stream_stateful's cold sample
     # to 62 s — the cutoff then recorded that one degraded-cold sample as
     # the gate's "min" (the exact failure mode the 30 -> 45 raise fixed,
     # one host-speed class further out). Same methodology — min-of-N with

@@ -39,11 +39,6 @@ EXPECTED_CACHES = {
         "_EMB_PROJ_CACHE",
         "_EMB_PAIRS_CACHE",
         "_LABELS_CACHE",
-        "_SEM_IVF_CACHE",
-        "_SEM_LSH_CACHE",
-        "_SEM_PROTO_CACHE",
-        "_SUBSTR_LEG_CACHE",
-        "_NGRAM_LEG_CACHE",
     },
     "operators/multimodal.py": {
         "_PHASH_TABLES",
@@ -66,26 +61,6 @@ EXPECTED_CACHES = {
     "operators/similarity.py": {
         "_EXACT_TOPK_CACHE",
         "_IVF_CENTROIDS",
-    },
-    "operators/text.py": {
-        "_BM25_TOPK_CACHE",
-        "_BIGRAM_LEG_CACHE",
-        "_DOCS_TOK_CACHE",
-        "_CONTAM_LEG_CACHE",
-        "_BACKOFF_LEG_CACHE",
-        "_BPE_PIECES_CACHE",
-        "_UNIGRAM_LEG_CACHE",
-        "_QC_WEIGHTS_CACHE",
-        "_BPE_LEG_CACHE",
-        "_DSIR_LEG_CACHE",
-        "_TOKPACK_LEG_CACHE",
-        "_PPL_LEG_CACHE",
-        "_VERDICT_LEG_CACHE",
-        "_UNITOK_LEG_CACHE",
-        # r13 optimization round: prepared-query memo — holds the
-        # lazily-assembled 19-leg union DataFrame OBJECT (no data beyond
-        # the inventoried leg checkpoints); execution still runs per call
-        "_TEXT_GATE_FRAME_MEMO",
     },
     "operators/extended.py": {
         "_CMS_HH_CACHE",
@@ -111,6 +86,14 @@ RESULT_GRAIN_BANNED = {
     "_CLUSTER_CORE_CACHE",  # dedup: labels ⋈ pagerank ⋈ weighted-pagerank
     "_IVF_ASSIGNED",        # similarity: the gate's probe assignment
     "_EXAMPLES_CACHE",      # pipeline_queries: jira_flatmap_examples' answer
+    # single-gate caches: a cache stays only where two or more gates read it
+    "_BM25_TOPK_CACHE", "_BIGRAM_LEG_CACHE", "_DOCS_TOK_CACHE",
+    "_CONTAM_LEG_CACHE", "_BACKOFF_LEG_CACHE", "_BPE_PIECES_CACHE",
+    "_UNIGRAM_LEG_CACHE", "_QC_WEIGHTS_CACHE", "_BPE_LEG_CACHE",
+    "_DSIR_LEG_CACHE", "_TOKPACK_LEG_CACHE", "_PPL_LEG_CACHE",
+    "_VERDICT_LEG_CACHE", "_UNITOK_LEG_CACHE", "_TEXT_GATE_FRAME_MEMO",
+    "_NGRAM_LEG_CACHE", "_SUBSTR_LEG_CACHE", "_SEM_LSH_CACHE",
+    "_SEM_IVF_CACHE", "_SEM_PROTO_CACHE",
 }
 
 # Module-level dicts that are NOT session caches (never hold DataFrames
@@ -162,34 +145,14 @@ def _is_session_cached_call(node: ast.Call) -> bool:
 _MUTATORS = {"setdefault", "update", "pop", "popitem", "clear", "__setitem__"}
 
 
-# The one module allowed a drain_session_caches() exemption (see
-# _violations): a function of that name anywhere else is checked like any
-# other code.
-DRAIN_MODULES = {"operators/text.py"}
-
-
-def _violations(tree: ast.Module, caches: set[str], rel: str) -> list[str]:
+def _violations(tree: ast.Module, caches: set[str]) -> list[str]:
     """Every use of a cache name other than its definition must be as the
     first argument of a session_cached(...) call. Direct subscript stores,
     deletes, and mutating method calls are violations; so is ANY other
     read (passing the dict somewhere else is how an undisciplined write
-    path starts).
-
-    ONE structural exemption (ADVICE r13): operators/text.py (the only
-    module in DRAIN_MODULES) may define a `drain_session_caches()`
-    function that frees + clears its OWN caches — the centralized drain
-    site that keeps the text gate's frame memo clearing coupled to its leg
-    caches. Everything lexically inside that one function is exempt; a
-    drain helper under any other name, or of that name in any other
-    module (ADVICE r14), still fails here."""
+    path starts). No function is exempt, whatever its name or module."""
     bad: list[str] = []
     allowed_use: set[int] = set()  # id() of Name nodes used legitimately
-    drain_nodes: set[int] = set()  # id() of every node inside the drain fn
-    if rel in DRAIN_MODULES:
-        for node in ast.walk(tree):
-            if isinstance(node, ast.FunctionDef) and node.name == "drain_session_caches":
-                for sub in ast.walk(node):
-                    drain_nodes.add(id(sub))
     for node in ast.walk(tree):
         if isinstance(node, ast.Call) and _is_session_cached_call(node):
             if node.args and isinstance(node.args[0], ast.Name):
@@ -198,11 +161,9 @@ def _violations(tree: ast.Module, caches: set[str], rel: str) -> list[str]:
         if isinstance(node, ast.Name) and node.id in caches:
             if isinstance(node.ctx, (ast.Store,)):
                 continue  # the module-level definition itself
-            if id(node) not in allowed_use and id(node) not in drain_nodes:
+            if id(node) not in allowed_use:
                 bad.append(f"{node.id} used outside session_cached at line {node.lineno}")
     for node in ast.walk(tree):
-        if id(node) in drain_nodes:
-            continue
         if isinstance(node, ast.Subscript) and isinstance(node.value, ast.Name):
             if node.value.id in caches and isinstance(
                 node.ctx, (ast.Store, ast.Del)
@@ -236,7 +197,7 @@ def test_every_module_level_dict_is_inventoried_and_disciplined():
         caches = dicts - exempt
         if caches:
             found[rel] = caches
-            problems += [f"{rel}: {v}" for v in _violations(tree, caches, rel)]
+            problems += [f"{rel}: {v}" for v in _violations(tree, caches)]
     assert found == EXPECTED_CACHES, (
         "module-level dict inventory drifted — new session caches must be "
         f"added to EXPECTED_CACHES (and use io.session_cached): {found}"
@@ -245,9 +206,9 @@ def test_every_module_level_dict_is_inventoried_and_disciplined():
 
 
 def test_drain_exemption_is_scoped_to_text_module():
-    """ADVICE r14 #3: a drain_session_caches() that clears its caches
-    directly passes only in operators/text.py; the same function in any
-    other module is a violation."""
+    """No module keeps a drain exemption any more: a
+    drain_session_caches() that clears its caches directly is a
+    violation everywhere, operators/text.py included."""
     tree = ast.parse(
         "_X_CACHE = {}\n"
         "def drain_session_caches():\n"
@@ -255,15 +216,16 @@ def test_drain_exemption_is_scoped_to_text_module():
         "        del _X_CACHE[k]\n"
         "    _X_CACHE.clear()\n"
     )
-    assert _violations(tree, {"_X_CACHE"}, "operators/text.py") == []
-    bad = _violations(tree, {"_X_CACHE"}, "operators/dedup.py")
+    bad = _violations(tree, {"_X_CACHE"})
     assert any("subscript-mutated" in v for v in bad)
     assert any("_X_CACHE.clear()" in v for v in bad)
+    assert any("used outside session_cached" in v for v in bad)
 
 
 def test_no_result_grain_caches():
-    """VERDICT r13 item 1: the five result-grain caches stay removed, and
-    the inventory cannot quietly re-admit them. Source-level like the
+    """VERDICT r13 item 1: the banned caches (result grain, and the
+    single-gate caches) stay removed, and the inventory cannot quietly
+    re-admit them. Source-level like the
     discipline test above: any reappearance of a banned name anywhere in
     the package (or in EXPECTED_CACHES) fails loudly with the file."""
     hits: list[str] = []
@@ -273,8 +235,8 @@ def test_no_result_grain_caches():
             if name in src:
                 hits.append(f"{py.relative_to(PKG)}: {name}")
     assert not hits, (
-        "result-grain cache name reintroduced (these memoized a gate's "
-        "answer; see RESULT_GRAIN_BANNED):\n" + "\n".join(hits)
+        "banned cache name reintroduced (see RESULT_GRAIN_BANNED):\n"
+        + "\n".join(hits)
     )
     inventoried = {n for names in EXPECTED_CACHES.values() for n in names}
     assert not (inventoried & RESULT_GRAIN_BANNED)

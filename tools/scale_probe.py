@@ -43,11 +43,11 @@ ratio/plan-shape criteria:
     group a 45-pair clique: a duplication-rate probe, not a scale probe —
     the text analog of the relational probe's key-remap discipline).
 
-Session-cache discipline: dedup_near_pairs and bm25_topk build
-session-cached silver tables (pair table, shingle index, bm25 top-k,
-exact cosine top-k) keyed (app, sf_dir) — every timed sample clears and
-frees those caches first, so both scales pay the FULL cold pipeline
-instead of a warm checkpoint scan.
+Session-cache discipline: dedup_near_pairs and bm25_topk read shared
+session-cached silver tables (pair table, shingle index, exact cosine
+top-k) keyed (app, sf_dir) — every timed sample clears and frees those
+caches first, so both scales pay the FULL cold pipeline instead of a
+warm checkpoint scan.
 """
 
 from __future__ import annotations
@@ -236,27 +236,17 @@ def build_exploded_docs(sf_dir: str, out_base: str, factor: int = 10) -> dict[st
 
 
 def _clear_text_session_caches() -> None:
-    """Free + clear every session cache the probed text gates build, so a
-    timed sample pays the full cold pipeline. The text module's caches —
-    INCLUDING the prepared-query frame memo, whose lazy plan references
-    the leg checkpoints freed here — are drained by the module's own
-    centralized helper (ADVICE r13: the memo-must-drain-with-the-legs
-    invariant is structural there, not a list each drain site maintains);
-    only the non-text caches the probed gates touch are enumerated
-    here."""
+    """Free + clear the shared session caches the probed gates read, so a
+    timed sample pays the full cold pipeline: the shingle index and the
+    minhash pair table (dedup_near_pairs) and the exact cosine top-k
+    (bm25_topk's rrf leg). Everything else these gates read is per-call
+    work."""
     from apache_jira_scraper_spark.io import free_local_checkpoint
-    from apache_jira_scraper_spark.operators import dedup, similarity, text
+    from apache_jira_scraper_spark.operators import dedup, similarity
 
-    text.drain_session_caches()
     for cache in (
         dedup._SHINGLE_CACHE,
         dedup._PAIRS_CACHE,
-        # r12: the substr leg rode a new session cache — same clear-list
-        # rule as the r11 bigram lesson (a cache added in the same change
-        # set as this probe missed the clear list and the probe's "cold"
-        # samples silently reused the warm checkpoint)
-        dedup._SUBSTR_LEG_CACHE,
-        dedup._NGRAM_LEG_CACHE,
         similarity._EXACT_TOPK_CACHE,
     ):
         for v in list(cache.values()):
