@@ -166,8 +166,8 @@ def scope():
     opens them:
 
     - `session_cached` runs every build() in one, so a builder's
-      intermediates are freed as soon as it returns; the builder's own
-      final plain localCheckpoint, unowned, is what the cache keeps.
+      intermediates are freed as soon as it returns; the frames of its
+      result are disowned first, and the cache keeps them.
     - `registry.register` wraps each gate. A gate may return a LAZY plan
       over frames it owns, so that set is kept on the wrapper (`owning`)
       and released on the gate's next call or by the wrapper's
@@ -215,7 +215,8 @@ def own(df: DataFrame) -> DataFrame:
 
 def disown(df: DataFrame) -> None:
     """Drop `df` from the innermost open scope without freeing it, for an
-    owner that has freed it itself (a no-op when none is open)."""
+    owner that has freed it itself or that hands it to a session cache (a
+    no-op when none is open)."""
     frames = _SCOPE.get()
     if frames is not None:
         frames[:] = [f for f in frames if f is not df]
@@ -237,7 +238,7 @@ def release(frames: list) -> None:
 
 
 # Serializes the save-narrow-restore windows over the session-global
-# spark.sql.shuffle.partitions conf (multimodal._build_clusters and
+# spark.sql.shuffle.partitions conf (multimodal._fixture_core and
 # extended.q_stream_stateful's streaming-leg window): if two such windows
 # ever overlapped, the save/restore would race and the session could be
 # left compiled at the narrowed width (ADVICE r09). Gate execution is
@@ -268,19 +269,9 @@ def narrowed_shuffle_partitions(spark: SparkSession, n: int):
             SHUFFLE_CONF_LOCK.release()
 
 
-# Re-entrant: cached builders may consult another session cache
-# (see session_cached docstring).
+# One re-entrant lock held across each get-or-build: a builder may consult
+# another session cache from its own thread (see session_cached docstring).
 _SESSION_CACHE_LOCK = threading.RLock()
-
-# Per-(cache, key) build locks (r13, VERDICT r12 item 4): the coarse
-# global lock serialized INDEPENDENT cold builds — quantize's
-# q_two_stage_topk builds its ts-spine, PQ and OPQ caches on concurrent
-# driver threads, and paid them back-to-back (~15.5 s) behind one lock.
-# The global lock now only guards dict get/put and lock-map maintenance;
-# each key's builder runs under its own RLock, so distinct builds overlap
-# while concurrent first calls for the SAME key still build exactly once
-# (the r09 leak contract).
-_BUILD_LOCKS: dict = {}
 
 # Monotonic count of session_cached() calls (hits AND builds). bench.py
 # snapshots it around each gate's samples to mark gates whose benched plan
@@ -290,7 +281,7 @@ SESSION_CACHE_TOUCHES = 0
 
 
 def session_cached(cache: dict, spark: SparkSession, extra_key: tuple, build):
-    """Session-scoped memoization for materialized (localCheckpoint'd)
+    """Session-scoped memoization for materialized (checkpointed)
     DataFrames, keyed (applicationId, *extra_key) — THE cache discipline
     for shared silver tables. A session cache is kept only where two or
     more registered gates read it; whatever a single gate reads is
@@ -301,55 +292,34 @@ def session_cached(cache: dict, spark: SparkSession, extra_key: tuple, build):
     otherwise accumulate one dead DataFrame per session restart for the
     process lifetime.
 
-    Locking (r13 — per-key build locks, VERDICT r12 item 4): the
-    process-wide RLock guards only dict get/put and the lock map; each
-    (cache, key)'s builder runs under its own RLock. Concurrent first
-    calls for the SAME key still build exactly once (the r09 contract —
-    losers wait, then read the winner's entry; no overwritten-checkpoint
-    leak), while INDEPENDENT cold builds (e.g. q_two_stage_topk's
-    ts-spine/pq/opq) can overlap on concurrent driver threads instead of
-    serializing behind one global lock. Re-entrant both levels down
-    because cached builders may themselves consult another session cache
-    (the dependency graph is layered/acyclic — a cycle would deadlock,
-    and would also be an infinite build recursion under any locking)."""
+    build() runs in its own `scope`. The frames of its result — a
+    DataFrame, or each DataFrame of a tuple — are disowned before that
+    scope closes, so a builder materializes its result with `checkpoint`
+    and the cache keeps it; every other frame the build registered is
+    freed when it returns, and on failure so is everything it had
+    checkpointed, result frames included (nothing is cached).
+
+    Locking: one process-wide re-entrant lock is held across the whole
+    get-or-build, so concurrent first calls build exactly once (losers
+    wait, then read the winner's entry). A builder may consult another
+    session cache on its own thread (the dependency graph is acyclic);
+    it must not reach session_cached from another thread and wait for
+    it, which would deadlock."""
     global SESSION_CACHE_TOUCHES
     with _SESSION_CACHE_LOCK:
         SESSION_CACHE_TOUCHES += 1
         app = spark.sparkContext.applicationId
         key = (app, *extra_key)
         got = cache.get(key)
-        if got is not None:
-            return got
-        for k in [k for k in cache if k[0] != app]:
-            # review r13: never pop a build lock that is HELD — a stale
-            # app's builder still in flight would otherwise (a) store its
-            # result after this eviction pass (one leaked checkpointed
-            # frame until the next pass) and (b) leave same-key waiters
-            # minting a SECOND lock, re-creating the r09 double-build /
-            # overwritten-checkpoint leak. Skipped keys are collected on
-            # a later call once their builder releases.
-            lk = _BUILD_LOCKS.get((id(cache), k))
-            if lk is not None and not lk.acquire(blocking=False):
-                continue
-            try:
-                del cache[k]
-                _BUILD_LOCKS.pop((id(cache), k), None)
-            finally:
-                if lk is not None:
-                    lk.release()
-        lock_key = (id(cache), key)
-        build_lock = _BUILD_LOCKS.get(lock_key)
-        if build_lock is None:
-            build_lock = _BUILD_LOCKS[lock_key] = threading.RLock()
-    with build_lock:
-        with _SESSION_CACHE_LOCK:
-            got = cache.get(key)
         if got is None:
-            with scope():  # the builder's intermediates die with the build
+            for k in [k for k in cache if k[0] != app]:
+                del cache[k]
+            with scope():
                 got = build()
-            with _SESSION_CACHE_LOCK:
-                cache[key] = got
-    return got
+                for df in got if isinstance(got, tuple) else (got,):
+                    disown(df)
+            cache[key] = got
+        return got
 
 
 def normalize_events_ts(df: DataFrame, spark: SparkSession, context: str) -> DataFrame:

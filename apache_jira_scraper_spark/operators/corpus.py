@@ -216,22 +216,7 @@ GROUP BY t.source ORDER BY t.source
 """
 
 
-def _report_base(docs: DataFrame) -> DataFrame:
-    """corpus_report's per-doc projection: (source, lang, quality band,
-    n_tokens) — a pure narrow map over the corpus."""
-    from .text import quality_score_bp_col
-
-    return docs.select(
-        "source",
-        "lang",
-        (F.floor(quality_score_bp_col() / 2000) * 2000).cast("bigint").alias("band"),
-        F.size(F.split("text", " ")).alias("_nt"),
-    )
-
-
-def corpus_report(
-    docs: DataFrame | None, ordered: bool = True, base: DataFrame | None = None
-) -> DataFrame:
+def corpus_report(docs: DataFrame, ordered: bool = True) -> DataFrame:
     """Data-card report: the per-release summary a corpus ships with —
     doc/token mass by source, by language, by quality band (2000-bp
     buckets of the shared quality score), plus the grand total, as ONE
@@ -246,18 +231,15 @@ def corpus_report(
     (grouping sets emit no rows on empty input; the twin's total leg
     carries a HAVING guard to match). Integer token counts make the
     DuckDB twin (`corpus_report_sql`) exact.
-
-    ``base``: optional precomputed `_report_base` projection (r13
-    optimization round) — the gate passes its session-materialized copy so
-    warm calls skip the per-doc tokenize/score pass; the default recomputes
-    it from ``docs``. With ``base`` given, ``docs`` is never read and may
-    be None (ADVICE r13: passing a freshly loaded frame cost a dead
-    spark.read.parquet schema read per call).
     """
-    if base is None:
-        if docs is None:
-            raise ValueError("corpus_report: pass `docs` or a precomputed `base`")
-        base = _report_base(docs)
+    from .text import quality_score_bp_col
+
+    base = docs.select(
+        "source",
+        "lang",
+        (F.floor(quality_score_bp_col() / 2000) * 2000).cast("bigint").alias("band"),
+        F.size(F.split("text", " ")).alias("_nt"),
+    )
     g = base.groupingSets(
         [[F.col("source")], [F.col("lang")], [F.col("band")], []],
         F.col("source"),
@@ -339,9 +321,6 @@ def corpus_report_sql() -> str:
     return _CORPUS_REPORT_SQL_TPL.format(stop=_STOP_SQL) + _CORPUS_REPORT_ORDER
 
 
-_DOMAIN_CARDS_CACHE: dict = {}
-
-
 def domain_cards(docs: DataFrame, emb: DataFrame) -> DataFrame:
     """Embedding-domain composition section of the data card (r13):
     k-means DOMAIN DISCOVERY over the embedding column — every vector is
@@ -386,20 +365,6 @@ def domain_cards(docs: DataFrame, emb: DataFrame) -> DataFrame:
     )
 
 
-def _domain_cards_cached(spark, sf_dir: str) -> DataFrame:
-    """Session-cached domain section (16 rows): the exact quantizer's
-    bounded collect + numpy rounds re-ran per gate call otherwise."""
-    from ..io import load_table, session_cached
-    from .similarity import _emb
-
-    def _build() -> DataFrame:
-        return domain_cards(
-            load_table(spark, sf_dir, "documents"), _emb(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_DOMAIN_CARDS_CACHE, spark, (sf_dir,), _build)
-
-
 def _domain_cards_sql() -> str:
     """The domain section's oracle arm: re-train the exact quantizer in
     SQL (ivf_exact_sql_ctes — only the CTEs up to the nprobe-1 ivq_asg
@@ -430,25 +395,6 @@ def corpus_report_gate_sql() -> str:
     )
 
 
-_REPORT_BASE_CACHE: dict = {}
-
-
-def _report_base_cached(spark, sf_dir: str) -> DataFrame:
-    """Session-materialized `_report_base` projection (r13 optimization
-    round, guide §5): the per-doc (source, lang, band, n_tokens) silver
-    column set is a pure function of the corpus — landed once per session
-    like text's tokenized-docs checkpoint; the grouping-sets aggregation
-    stays live per call."""
-    from ..io import load_table, session_cached
-
-    def _build() -> DataFrame:
-        return _report_base(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_REPORT_BASE_CACHE, spark, (sf_dir,), _build)
-
-
 def q_corpus_report(spark, sf_dir: str) -> DataFrame:
     """Data-card report gate over the documents table (driver-certified
     since r04 — the slot freed by the returnflag_stats merge). r13 adds
@@ -456,11 +402,13 @@ def q_corpus_report(spark, sf_dir: str) -> DataFrame:
     embedding domain (exact-IVF k-means cells), certifying the domain
     quantizer + the embeddings⋈documents composition under the same
     hash as the labeled sections."""
-    # ADVICE r13: with `base` supplied, corpus_report never reads `docs` —
-    # the previous load_table call here was a dead per-call schema read.
+    from ..io import load_table
+    from .similarity import _emb
+
+    docs = load_table(spark, sf_dir, "documents")
     return (
-        corpus_report(None, ordered=False, base=_report_base_cached(spark, sf_dir))
-        .unionByName(_domain_cards_cached(spark, sf_dir))
+        corpus_report(docs, ordered=False)
+        .unionByName(domain_cards(docs, _emb(spark, sf_dir)))
         .orderBy(
             F.col("section").asc_nulls_last(), F.col("key").asc_nulls_last()
         )
@@ -926,26 +874,6 @@ GATE_MIX_WEIGHTS = {"src0": 500_000, "src1": 300_000, "src2": 200_000}
 GATE_MIX_BUDGET = 20_000
 
 
-_DOCS_PROJ_CACHE: dict = {}
-
-
-def _docs_projection(spark, sf_dir: str) -> DataFrame:
-    """Session-materialized (doc_id, source, n_chars, text) corpus
-    projection — the assembly gate's shared silver leaf (the
-    _emb_projection pattern; one scan per session, not one per leg per
-    bench sample)."""
-    from ..io import load_table, session_cached
-
-    def _build() -> DataFrame:
-        return (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "source", "n_chars", "text")
-            .localCheckpoint(eager=True)
-        )
-
-    return session_cached(_DOCS_PROJ_CACHE, spark, (sf_dir,), _build)
-
-
 def q_corpus_assembly(spark, sf_dir: str) -> DataFrame:
     """The corpus-assembly family's driver gate: split counts + packing
     summary + cross-split contamination + document chunking + source
@@ -957,17 +885,19 @@ def q_corpus_assembly(spark, sf_dir: str) -> DataFrame:
     carries md5(chunk_text) in its key so the window-slicing text content
     (not just counts) is hash-certified.
 
-    The four docs-reading legs share ONE materialized projection of the
-    corpus scan (doc_id, source, n_chars, text) instead of four parquet
-    scans + four Catalyst-planned subtrees over the same file (VERDICT r05
-    item 3: the gate's cold run re-read the corpus per leg). The
-    projection is session-cached like _emb_projection/shingle_index, so
-    bench min-of-N re-samples don't re-materialize the corpus per call
-    (review r06). Production analog: land the silver table once, fan the
-    assembly stages out from the landed copy. The contam leg composes the
-    session-shared minhash pair table and never rescans the corpus.
+    The four docs-reading legs share ONE projection of the corpus scan
+    (doc_id, source, n_chars, text), checkpointed once per call, instead
+    of four parquet scans + four Catalyst-planned subtrees over the same
+    file. The contam leg composes the session-shared minhash pair table
+    and never rescans the corpus.
     """
-    docs = _docs_projection(spark, sf_dir)
+    from ..io import checkpoint, load_table
+
+    docs = checkpoint(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "n_chars", "text"
+        )
+    )
     split_leg = split_counts(docs, ordered=False).select(
         F.lit("split").alias("leg"),
         F.col("split").alias("k1"),

@@ -248,7 +248,7 @@ def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SHINGLE_CACHE,
         spark,
         (sf_dir,),
-        lambda: _doc_shingle_hashed(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: checkpoint(_doc_shingle_hashed(spark, sf_dir)),
     )
 
 
@@ -275,7 +275,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _PAIRS_CACHE,
         spark,
         (sf_dir,),
-        lambda: _minhash_pairs_uncached(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: checkpoint(_minhash_pairs_uncached(spark, sf_dir)),
     )
 
 
@@ -860,26 +860,6 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_SIG_SQL = f"SELECT * FROM ({_SIMHASH_SQL}) s ORDER BY doc_id"
 
 
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _simhash_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-materialized (doc_id, simhash) sketch table — the shingle_
-    index pattern: the pair join's two sides read one checkpointed leaf. A
-    bare .persist() here registered the plan in the CacheManager forever
-    (a strong reference — never GC'd, executor storage leaked for the rest
-    of the session); the localCheckpoint blocks are ContextCleaner-managed
-    and the cache is keyed per (session, sf_dir) like its siblings."""
-    from ..io import session_cached
-
-    return session_cached(
-        _SIMHASH_CACHE,
-        spark,
-        (sf_dir,),
-        lambda: _simhash_df(spark, sf_dir).localCheckpoint(eager=True),
-    )
-
-
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: hamming distance ≤ 3 on the 60-bit sketch.
 
@@ -891,7 +871,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs that collide in several blocks. This is the Manku/Google simhash
     dedup layout: equi-join shuffles on a small key, never a cross-join.
     """
-    sim = _simhash_cached(spark, sf_dir)
+    # both join sides read the sketch: materialize it once per call
+    sim = checkpoint(_simhash_df(spark, sf_dir))
     blocks = sim.select(
         "doc_id",
         "simhash",
@@ -1099,7 +1080,7 @@ def _emb_projection(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFrame:
 
     def _build() -> DataFrame:
         emb = load_table_parallel(spark, sf_dir, "embeddings")
-        return _normed_bucketed(emb, n_bits).localCheckpoint(eager=True)
+        return checkpoint(_normed_bucketed(emb, n_bits))
 
     return session_cached(_EMB_PROJ_CACHE, spark, (sf_dir, n_bits), _build)
 
@@ -1115,9 +1096,11 @@ def _emb_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import session_cached
 
     def _build() -> DataFrame:
-        return _pairs_from_projection(
-            _emb_projection(spark, sf_dir, EMB_N_BITS), COSINE_DUP_THRESHOLD
-        ).localCheckpoint(eager=True)
+        return checkpoint(
+            _pairs_from_projection(
+                _emb_projection(spark, sf_dir, EMB_N_BITS), COSINE_DUP_THRESHOLD
+            )
+        )
 
     return session_cached(_EMB_PAIRS_CACHE, spark, (sf_dir,), _build)
 
@@ -1247,30 +1230,15 @@ def connected_components(
     return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
-_LABELS_CACHE: dict = {}
-
-
 def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) near-dup component labels only — the entry
     point for consumers that need the membership and nothing else
     (corpus assembly's keeper selection): no pagerank rounds, no sizes
     window, no rank join (review r10 — the gate's centrality fold was
     making every assemble_corpus call pay 5 rank iterations it then
-    projected away).
-
-    Session-cached (the silver-table discipline): a pure function of
-    (session, sf_dir), and un-cached every assemble_corpus call would
-    re-run the multi-round hash-to-min loop per call (review r10)."""
-    from ..io import session_cached
-
-    return session_cached(
-        _LABELS_CACHE,
-        spark,
-        (sf_dir,),
-        lambda: connected_components(
-            minhash_pairs(spark, sf_dir).select("d1", "d2")
-        ).localCheckpoint(eager=True),
-    )
+    projected away). A lazy projection over the converged labels
+    checkpoint, which the caller's io scope owns."""
+    return connected_components(minhash_pairs(spark, sf_dir).select("d1", "d2"))
 
 
 def _cluster_core(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -169,21 +169,6 @@ ORDER BY l_returnflag
 CMS_EPS = 0.0001
 CMS_CONF = 0.99
 CMS_SEED = 42
-_CMS_HH_CACHE: dict = {}
-
-
-def _cms_hh_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached heavy-hitter verdict (3 rows): the leg's two
-    lineitem passes + two driver collects are per-session-constant
-    (measured ~1.4 s/warm-call at sf0.1 uncached)."""
-    from ..io import session_cached
-
-    return session_cached(
-        _CMS_HH_CACHE,
-        spark,
-        (sf_dir,),
-        lambda: q_cms_heavy_hitter(spark, sf_dir).localCheckpoint(eager=True),
-    )
 
 
 def q_cms_heavy_hitter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,7 +255,7 @@ def q_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     library API."""
     quant = q_quantiles_exact(spark, sf_dir)
     distinct = q_approx_distinct_parts(spark, sf_dir)
-    hh = _cms_hh_cached(spark, sf_dir)
+    hh = q_cms_heavy_hitter(spark, sf_dir)
     return (
         quant.join(distinct, "l_returnflag")
         .join(hh, "l_returnflag")
@@ -496,10 +481,8 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io import load_table, narrowed_shuffle_partitions
 
-    # One shared save-narrow-restore window (io.narrowed_shuffle_partitions,
-    # review r10: the hand-rolled copies here and in _build_clusters needed
-    # the same exception-safety fixes twice): serialized against
-    # multimodal._build_clusters (ADVICE r09), lock-leak- and
+    # One shared save-narrow-restore window (io.narrowed_shuffle_partitions):
+    # serialized against multimodal._fixture_core, lock-leak- and
     # restore-failure-safe.
     with narrowed_shuffle_partitions(spark, 4):
         # 6th leg (r06, VERDICT r05 item 5): cross-batch near-dup ingest —
@@ -865,9 +848,6 @@ ORDER BY issue_key
 """
 
 
-_REST_FRAME_MEMO: dict = {}
-
-
 def q_jira_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paginated REST scan through the custom DataSource against an
     in-process mock Jira (deterministic corpus), then the silver extraction.
@@ -878,22 +858,8 @@ def q_jira_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 3: the mock corpus is a pure formula of (project, i), so
     _mock_ingest_sql regenerates the expected silver rows independently in
     DuckDB (generate_series + the extraction semantics restated) — a
-    dropped page or mis-parsed field hash-mismatches.
-
-    r14 (guide §7.3, the prepared-query class): the UNSORTED frame OBJECT
-    is memoized per session — re-building + re-analyzing the from_json(
-    RAW_ISSUE) + extraction expression tree cost ~1 s of driver-side plan
-    work per call (measured: fresh-frame 2.0-2.6 s vs reused-frame
-    1.0-1.4 s warm, same session). NO data is materialized: every
-    execution re-runs the page fetches (DataSource read() per task) and
-    the full extraction; the presentation sort stays live per call."""
-    from ..io import session_cached
-
-    def _build() -> DataFrame:
-        return _rest_ingest_frame(spark)
-
-    frame = session_cached(_REST_FRAME_MEMO, spark, (sf_dir,), _build)
-    return frame.orderBy("issue_key")
+    dropped page or mis-parsed field hash-mismatches."""
+    return _rest_ingest_frame(spark).orderBy("issue_key")
 
 
 def _rest_ingest_frame(spark: SparkSession) -> DataFrame:

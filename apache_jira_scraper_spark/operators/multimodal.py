@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 
 from ..io import (
     checkpoint,
-    free_local_checkpoint,
     load_table,
     narrowed_shuffle_partitions,
     session_cached,
@@ -3542,14 +3541,9 @@ def _phash_pair_fold(
 #: multi-shape grids (5 docs / 1306 patches at sf0.01).
 PATCH_SAMPLE_MOD = 100
 
-#: Session caches for the multimodal gate (keyed (applicationId, sf_dir)
-#: by io.session_cached): the eager clusters leg and the three
-#: per-modality hash tables (r09 — the Arrow decode stages are the
-#: gate's dominant per-call cost and the tables are pure functions of
-#: the input corpus).
-_MEDIA_CLUSTERS: dict = {}
+#: The three per-modality hash tables, the one multimodal session cache
+#: (keyed (applicationId, sf_dir) by io.session_cached).
 _PHASH_TABLES: dict = {}
-_PHASH_PAIRS: dict = {}
 
 
 def phash_tables_cached(spark: SparkSession, sf_dir: str):
@@ -3569,33 +3563,15 @@ def phash_tables_cached(spark: SparkSession, sf_dir: str):
     the JVM↔Python boundary is the cost; cross the payloads once)."""
 
     def _build_phash_tables():
-        built: list = []
-        try:
-            built.append(
-                image_phash(phash_image_fixture(spark, sf_dir)).localCheckpoint(
-                    eager=True
-                )
-            )
-            built.append(
-                frame_phash(phash_video_fixture(spark, sf_dir)).localCheckpoint(
-                    eager=True
-                )
-            )
+        return (
+            checkpoint(image_phash(phash_image_fixture(spark, sf_dir))),
+            checkpoint(frame_phash(phash_video_fixture(spark, sf_dir))),
             # the onset anchor is what the audio leg certifies: member 1
             # is the time-shifted copy and must collide at hamming 0
-            built.append(
-                audio_phash(
-                    phash_audio_fixture(spark, sf_dir), anchor="onset"
-                ).localCheckpoint(eager=True)
-            )
-        except BaseException:
-            # a later checkpoint failing must not strand the earlier ones
-            # (nothing cached on failure; a retry would rebuild on a heap
-            # pinning dead state — same rule as _build_clusters)
-            for df in built:
-                free_local_checkpoint(df)
-            raise
-        return tuple(built)
+            checkpoint(
+                audio_phash(phash_audio_fixture(spark, sf_dir), anchor="onset")
+            ),
+        )
 
     return session_cached(_PHASH_TABLES, spark, (sf_dir,), _build_phash_tables)
 
@@ -3721,17 +3697,10 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Fixture legs (phash tables/pairs/clusters, index matches, audio/
-    # video/scene features): every one is a pure function of (session,
-    # sf_dir) over CONSTRUCTED fixture payloads, yet the gate rebuilt and
-    # re-executed all 11 fold subtrees per call - including a fresh Arrow
-    # decode of the audio/video fixtures (r13 optimization round, guide
-    # S4/S5: one fixture decode per session). They are now merged into ONE
-    # session-cached side table by _build_fixture_core below; chained
-    # per-doc LEFT joins of unique-keyed folds equal one left join of
-    # their full-outer merge, so the gate output is row-identical.
-    core = session_cached(
-        _FIXTURE_CORE, spark, (sf_dir,), lambda: _build_fixture_core(spark, sf_dir)
-    )
+    # video/scene features) merged into ONE side table by
+    # _fixture_core below; chained per-doc LEFT joins of unique-keyed
+    # folds equal one left join of their full-outer merge.
+    core = _fixture_core(spark, sf_dir)
     return (
         spine.join(per_doc, "doc_id", "left")
         .join(core, "doc_id", "left")
@@ -3780,17 +3749,14 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FIXTURE_CORE: dict = {}
-
-
-def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal gate's 11 fixture-derived per-doc folds merged on
-    doc_id into one eager session checkpoint (io.session_cached via
-    _FIXTURE_CORE). Each fold is unique on doc_id, so the full-outer
-    merge joined LEFT onto the spine is row- and null-identical to the
-    previous 11 chained left joins; missing-fold columns stay NULL and
-    the gate's COALESCE defaults apply unchanged. Size is bounded by the
-    fixture sample (~n_docs/PHASH_SAMPLE_MOD rows per modality)."""
+    doc_id into one lazy side table. Each fold is unique on doc_id, so
+    the full-outer merge joined LEFT onto the spine is row- and
+    null-identical to 11 chained left joins; missing-fold columns stay
+    NULL and the gate's COALESCE defaults apply unchanged. Size is
+    bounded by the fixture sample (~n_docs/PHASH_SAMPLE_MOD rows per
+    modality)."""
     # phash near-dup legs (VERDICT r07 item 1): REAL constructed payloads
     # (PGM/PPM stills, Y4M video) through the REAL decoders, dHash, and
     # pigeonhole-banded joins — image_phash / image_near_dup_pairs /
@@ -3801,32 +3767,17 @@ def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (n_docs/PHASH_SAMPLE_MOD rows): AQE broadcast-joins them onto the
     # per-doc spine.
     img_ph, vid_ph, aud_ph = phash_tables_cached(spark, sf_dir)
-    # each pair table feeds multiple consumers (its per-doc fold + the
-    # cross-modal cluster edge union below), and like the hash tables it
-    # is a pure function of (session, sf_dir) — so the three are
-    # session-cached EAGER checkpoints (VERDICT r09 item 2: the previous
-    # per-call lazy checkpoints re-ran the banded self-joins every gate
-    # call and left one unfreed trio per call to driver GC).
-    # media=None is safe here: with phash= given the pair ops never touch
-    # the payload side (the decode already happened in the cached tables)
-    def _build_pair_tables():
-        built: list = []
-        try:
-            for op, ph in (
-                (image_near_dup_pairs, img_ph),
-                (video_near_dup_pairs, vid_ph),
-                (audio_near_dup_pairs, aud_ph),
-            ):
-                built.append(op(None, phash=ph).localCheckpoint(eager=True))
-        except BaseException:
-            # partial-free-on-failure, same rule as _build_phash_tables
-            for df in built:
-                free_local_checkpoint(df)
-            raise
-        return tuple(built)
-
-    img_pairs, vid_pairs, aud_pairs = session_cached(
-        _PHASH_PAIRS, spark, (sf_dir,), _build_pair_tables
+    # Each pair table feeds its per-doc fold AND the cross-modal cluster
+    # edge union below, so it is checkpointed once per call. media=None
+    # is safe here: with phash= given the pair ops never touch the
+    # payload side (the decode already happened in the cached tables).
+    img_pairs, vid_pairs, aud_pairs = (
+        checkpoint(op(None, phash=ph))
+        for op, ph in (
+            (image_near_dup_pairs, img_ph),
+            (video_near_dup_pairs, vid_ph),
+            (audio_near_dup_pairs, aud_ph),
+        )
     )
     img_fold = img_ph.select("doc_id", F.col("phash").alias("img_phash"))
     img_pair_fold = _phash_pair_fold(
@@ -3877,40 +3828,18 @@ def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(aud_pairs.select("doc_a", "doc_b"))
     )
 
-    # connected_components executes EAGERLY (per-round checkpoints +
-    # convergence counts), which would otherwise run at gate
-    # CONSTRUCTION on every call — including plan-inspection sweeps
-    # (review r09). The clusters leg is a pure function of (session,
-    # sf_dir), so it builds ONCE per session via THE session-cache
-    # discipline (io.session_cached, the _emb_pairs_cached precedent);
-    # bench marks cache touches, keeping min-of-N honest.
-    def _build_clusters() -> DataFrame:
-        # Materialize the pair tables at SESSION partitioning BEFORE
-        # narrowing the conf window (review r09: the first action inside
-        # the window would otherwise compile the certified banded joins
-        # 8-way); only the component rounds — tiny fixed-cost exchanges
-        # over the n_docs/PHASH_SAMPLE_MOD edge set — run at 8 (the r03
-        # sizing argument; at production volume size it UP the same way).
-        # The edge and label checkpoints are owned by the build scope:
-        # freed on success and on failure (e.g. non-convergence), so a
-        # retrying caller never rebuilds on a heap pinning the dead state.
-        edges_ck = checkpoint(edges)
-        # One shared save-narrow-restore window
-        # (io.narrowed_shuffle_partitions — serialized against
-        # extended.q_stream_stateful's window, ADVICE r09; lock-leak- and
-        # restore-failure-safe, review r10).
-        with narrowed_shuffle_partitions(spark, 8):
-            return (
-                media_near_dup_clusters(edges_ck)
-                .select(
-                    "doc_id",
-                    F.col("cluster_id").alias("media_cluster"),
-                    F.col("is_keeper").cast("long").alias("media_keeper"),
-                )
-                .localCheckpoint(eager=True)
-            )
-
-    clus = session_cached(_MEDIA_CLUSTERS, spark, (sf_dir,), _build_clusters)
+    # The pair tables are materialized at SESSION partitioning above, so
+    # only the component rounds — tiny fixed-cost exchanges over the
+    # n_docs/PHASH_SAMPLE_MOD edge set — run in the narrowed window (at
+    # production volume, size it UP the same way). The window is
+    # io.narrowed_shuffle_partitions, serialized against
+    # extended.q_stream_stateful's.
+    with narrowed_shuffle_partitions(spark, 8):
+        clus = media_near_dup_clusters(edges).select(
+            "doc_id",
+            F.col("cluster_id").alias("media_cluster"),
+            F.col("is_keeper").cast("long").alias("media_keeper"),
+        )
     m_parity = F.expr(
         f"(doc_id % {PHASH_GROUP}) DIV {PHASH_SAMPLE_MOD} % 2"
     )
@@ -3996,7 +3925,7 @@ def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         sc,
     ):
         core = core.join(side, "doc_id", "full")
-    return core.localCheckpoint(eager=True)
+    return core
 
 
 #: Shared oracle CTE chain (documents -> fixture-member image dHash):

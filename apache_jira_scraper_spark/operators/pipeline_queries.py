@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import checkpoint, load_table
 from .extract import extract_issues
 from .tasks import comment_digests, issues_to_examples
 
@@ -204,7 +204,7 @@ def _issues(spark: SparkSession, sf_dir: str) -> DataFrame:
         # production analog is a silver parquet table (or reliable
         # checkpoint()); local-mode block storage is exactly that
         # materialization without the FS trip.
-        return df.localCheckpoint(eager=True)
+        return checkpoint(df)
 
     return session_cached(_ISSUES_CACHE, spark, (sf_dir,), _build)
 

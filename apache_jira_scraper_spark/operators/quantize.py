@@ -459,7 +459,6 @@ def pq_adc_topk(
     top_k: int = 5,
     vec_col: str = "e",
     id_col: str = "vec_id",
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: full-precision queries against the
     PQ-encoded corpus. Returns (qid, rank, nid, adist) — adist is the
@@ -497,9 +496,7 @@ def pq_adc_topk(
             lambda a, v: a + v,
         ).alias("d"),
     )
-    if codes is None:
-        codes = pq_encode(emb, codebooks, vec_col=vec_col, id_col=id_col)
-    codes = codes.select(
+    codes = pq_encode(emb, codebooks, vec_col=vec_col, id_col=id_col).select(
         F.col(id_col).alias("nid"),
         F.posexplode(F.col("pq_code").cast("array<int>")).alias("sub", "cid"),
     )
@@ -736,7 +733,6 @@ def opq_adc_topk(
     top_k: int = 5,
     vec_col: str = "e",
     id_col: str = "vec_id",
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k in the rotated frame — rotation is a narrow projection on
     both sides (corpus once at encode, queries once at LUT build), after
@@ -751,7 +747,6 @@ def opq_adc_topk(
         top_k=top_k,
         vec_col="_re",
         id_col=id_col,
-        codes=codes,
     )
 
 
@@ -928,43 +923,6 @@ OPQ_MIN_HITS = 1
 PQ_HITS_TOTAL_MIN = 37
 OPQ_HITS_TOTAL_MIN = 40
 
-_PQ_MODEL: dict = {}
-_OPQ_MODEL: dict = {}
-_TS_SPINE: dict = {}
-
-
-def _pq_model_cached(spark, sf_dir: str):
-    """Session-cached (codebooks, encoded-corpus checkpoint) — both pure
-    functions of (session, sf_dir), the silver-table discipline: train and
-    encode once per session, every later gate call scans stored blocks."""
-    from ..io import session_cached
-    from .similarity import _emb
-
-    def _build():
-        emb = _emb(spark, sf_dir)
-        books = pq_train(emb)
-        codes = pq_encode(emb, books).localCheckpoint(eager=True)
-        return (books, codes)
-
-    return session_cached(_PQ_MODEL, spark, (sf_dir,), _build)
-
-
-def _opq_model_cached(spark, sf_dir: str):
-    """Session-cached (rotation, codebooks, rotated-corpus codes) — the
-    OPQ counterpart of _pq_model_cached; the O(dim²) corpus rotation runs
-    once per session inside the cached encode."""
-    from ..io import session_cached
-    from .similarity import _emb
-
-    def _build():
-        emb = _emb(spark, sf_dir)
-        r, books = opq_train(emb)
-        codes = opq_encode(emb, r, books).localCheckpoint(eager=True)
-        return (r, books, codes)
-
-    return session_cached(_OPQ_MODEL, spark, (sf_dir,), _build)
-
-
 def q_two_stage_topk(spark, sf_dir: str) -> DataFrame:
     """Driver gate: int8 candidate scan -> exact float re-rank, certified
     against the exact brute-force oracle (same (qid, rank, nid, cosine)
@@ -985,41 +943,34 @@ def q_two_stage_topk(spark, sf_dir: str) -> DataFrame:
     OPQ_HITS_TOTAL_MIN). The per-query min floor tolerates a near-random
     shortlist when the floor is 1; the total is satisfied only by real
     aggregate recall (>= 37/50 and 40/50 respectively)."""
-    from ..io import session_cached
+    from concurrent.futures import ThreadPoolExecutor
+    from contextvars import copy_context
+
+    from ..io import checkpoint
     from .similarity import N_QUERIES, TOP_K, _emb
 
     emb = _emb(spark, sf_dir)
-    # The 50-row two-stage result is referenced TWICE below (hits spine +
-    # output spine); un-materialized, Spark executes the whole int8
-    # shortlist + exact re-rank pipeline once per reference (review r10:
-    # 28 scans / 32 exchanges with 1 reuse on the executed plan). It is a
-    # pure function of (session, sf_dir) — the silver-table discipline.
-    # r13 (VERDICT r12 item 4): the three session-cached builds are
-    # independent (ts-spine, pq codebooks+codes, opq rotation+codes) and
-    # each cost ~3.5-4 s cold; under io.session_cached's per-key build
-    # locks they now run on concurrent driver threads (the dedup_clusters
-    # consumer-overlap pattern), so a cold gate pays the slowest build,
-    # not the sum. Warm calls hit the dicts with only three pool submits
-    # of overhead.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _ts_build():
-        return session_cached(
-            _TS_SPINE,
-            spark,
-            (sf_dir,),
-            lambda: two_stage_topk(
-                emb, n_queries=N_QUERIES, top_k=TOP_K, shortlist_k=GATE_SHORTLIST_K
-            ).localCheckpoint(eager=True),
-        )
-
+    # The three builds are independent and each costs seconds cold: the
+    # two-stage spine (read twice below — hits spine and output spine —
+    # so checkpointed), the PQ codebooks and the OPQ rotation+codebooks
+    # (driver-side training). They run on concurrent driver threads, so a
+    # call pays the slowest build, not the sum; each thread runs in a copy
+    # of the caller's context, so the spine checkpoint lands in the
+    # caller's io scope.
     with ThreadPoolExecutor(max_workers=3) as ex:
-        f_ts = ex.submit(_ts_build)
-        f_pq = ex.submit(_pq_model_cached, spark, sf_dir)
-        f_opq = ex.submit(_opq_model_cached, spark, sf_dir)
+        f_ts = ex.submit(
+            copy_context().run,
+            lambda: checkpoint(
+                two_stage_topk(
+                    emb, n_queries=N_QUERIES, top_k=TOP_K, shortlist_k=GATE_SHORTLIST_K
+                )
+            ),
+        )
+        f_pq = ex.submit(copy_context().run, pq_train, emb)
+        f_opq = ex.submit(copy_context().run, opq_train, emb)
         ts = f_ts.result()
-        books, codes = f_pq.result()
-        r, obooks, ocodes = f_opq.result()
+        books = f_pq.result()
+        r, obooks = f_opq.result()
 
     def _hits(shortlist: DataFrame, name: str) -> DataFrame:
         return (
@@ -1029,19 +980,11 @@ def q_two_stage_topk(spark, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias(name))
         )
 
-    # The PQ/OPQ ADC scoring joins and their per-query hit counts run PER
-    # CALL (r14, VERDICT r13 item 1: the r13 session checkpoint of the
-    # (qid, _ph, _oh) hit table memoized the gate's recall verdict — warm
-    # bench samples timed a 10-row checkpoint scan instead of the declared
-    # ADC scans). Chained unique-keyed left joins equal one left join of
-    # the full-outer merge, so the merged shape is row-identical to two
+    # Chained unique-keyed left joins equal one left join of the
+    # full-outer merge, so the merged shape is row-identical to two
     # separate hit joins.
-    short = pq_adc_topk(
-        emb, books, n_queries=N_QUERIES, top_k=PQ_GATE_SHORTLIST_K, codes=codes
-    )
-    oshort = opq_adc_topk(
-        emb, r, obooks, n_queries=N_QUERIES, top_k=PQ_GATE_SHORTLIST_K, codes=ocodes
-    )
+    short = pq_adc_topk(emb, books, n_queries=N_QUERIES, top_k=PQ_GATE_SHORTLIST_K)
+    oshort = opq_adc_topk(emb, r, obooks, n_queries=N_QUERIES, top_k=PQ_GATE_SHORTLIST_K)
     hits = _hits(short, "_ph").join(_hits(oshort, "_oh"), "qid", "full")
 
     # The sum-of-hits totals ride the SAME joined frame: each qid appears

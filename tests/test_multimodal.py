@@ -4499,59 +4499,49 @@ def test_media_tail_gate_fixture_premises(spark, sf_dir):
     assert checked
 
 
-def test_multimodal_clusters_leg_builds_once_per_session(spark, sf_dir):
-    """Review r09: the gate's clusters leg is session-cached — building
-    the gate twice must run the eager connected-components build ONCE
-    (second construction reuses the same checkpointed frame), keeping
-    plan-inspection sweeps and bench re-samples from re-paying the
-    iterative compute, and the cached frame must still be alive
-    (consumable) after the build's scratch frees."""
+def test_multimodal_phash_tables_build_once_per_session(spark, sf_dir):
+    """The three fixture hash tables (the gate's Arrow decode) are the
+    multimodal session cache: two gate calls reuse the same cached tuple.
+    The fixture core, pair tables and clusters are per-call work owned by
+    the gate wrapper, so a second call frees the first call's and, after
+    release(), only the cached tables' storage is left."""
+    from apache_jira_scraper_spark import registry
     from apache_jira_scraper_spark.io import free_local_checkpoint
     from apache_jira_scraper_spark.operators import multimodal as M
+    from tests.oracle_utils import persistent_rdd_ids
 
-    def _drain(cache):
+    gate = registry.queries()["multimodal_decode"]
+
+    def _drain():
         # dropping the only reference without freeing would strand the
         # eager checkpoint blocks until GC — the leak io.py documents
-        for v in cache.values():
-            for df in v if isinstance(v, tuple) else (v,):
+        for tables in M._PHASH_TABLES.values():
+            for df in tables:
                 free_local_checkpoint(df)
-        cache.clear()
+        M._PHASH_TABLES.clear()
 
-    # r13 optimization round (W9): the gate now consumes the merged
-    # fixture core; the inner folds build once INSIDE the core build, so
-    # the core cache must be drained too for a clean rebuild — and the
-    # session-once/alive-after-frees contract is asserted on the core AND
-    # the inner iterative caches it populates.
-    _drain(M._FIXTURE_CORE)
-    _drain(M._PHASH_PAIRS)
-    _drain(M._MEDIA_CLUSTERS)
-    _drain(M._PHASH_TABLES)
+    _drain()
+    before = persistent_rdd_ids(spark)
     try:
-        M.q_multimodal_decode(spark, sf_dir)
-        assert len(M._FIXTURE_CORE) == 1
-        assert len(M._MEDIA_CLUSTERS) == 1
+        n_rows = gate(spark, sf_dir).count()
         assert len(M._PHASH_TABLES) == 1
-        (key, core) = next(iter(M._FIXTURE_CORE.items()))
+        (key, tables) = next(iter(M._PHASH_TABLES.items()))
         assert key[0] == spark.sparkContext.applicationId and sf_dir in key
-        (ckey, cached) = next(iter(M._MEDIA_CLUSTERS.items()))
-        tables = next(iter(M._PHASH_TABLES.values()))
         assert len(tables) == 3
-        n_rows = core.count()  # alive: scratch frees spared the result
-        M.q_multimodal_decode(spark, sf_dir)
-        assert len(M._FIXTURE_CORE) == 1
-        assert M._FIXTURE_CORE[key] is core, "fixture core rebuilt"
-        assert M._MEDIA_CLUSTERS[ckey] is cached, "clusters leg rebuilt"
-        # the hash tables — the decode's dominant cost — must be the SAME
-        # checkpointed frames, not a rebuilt tuple (review r09)
+        table_ids = {t._jdf.queryExecution().analyzed().rdd().id() for t in tables}
+        first_call = persistent_rdd_ids(spark) - before - table_ids
+        assert first_call, "the per-call pair tables are checkpointed"
+        assert gate(spark, sf_dir).count() == n_rows
         assert next(iter(M._PHASH_TABLES.values())) is tables, "phash rebuilt"
+        assert not first_call & persistent_rdd_ids(spark), (
+            "the second call must free the first call's checkpoints"
+        )
+        gate.release()
+        assert persistent_rdd_ids(spark) - before == table_ids
         assert all(t.count() > 0 for t in tables)
-        assert cached.count() > 0  # clusters frame alive too
-        assert core.count() == n_rows
     finally:
-        _drain(M._FIXTURE_CORE)
-        _drain(M._PHASH_PAIRS)
-        _drain(M._MEDIA_CLUSTERS)
-        _drain(M._PHASH_TABLES)
+        gate.release()
+        _drain()
 
 
 def test_cross_modal_image_matches_video_frame(spark):
